@@ -29,10 +29,14 @@ import graft.Span.Kind
   */
 object Extract {
 
+  // Spark decodes a missing string as null; the kernel reads it as empty
+  private def orEmpty(s: String): String = if (s == null) "" else s
+  private def textOf(s: Span): String   = orEmpty(s.text)
+
   /** Media-ref definitions: span.text = "name -> uri". */
   private def refMap(spans: Seq[Span]): Map[String, String] =
     spans.iterator.filter(_.kind == Kind.RefDef).flatMap { s =>
-      s.text.split("->", 2) match {
+      textOf(s).split("->", 2) match {
         case Array(name, uri) => Some(name.trim -> uri.trim)
         case _                => None
       }
@@ -42,13 +46,17 @@ object Extract {
     * A ref that is already a URI (contains "://") passes through — this
     * makes the whole pipeline idempotent on its own output, which is what
     * lets snapshot reruns re-extract an already-extracted table safely. */
-  def resolveMedia(span: Span, refs: Map[String, String]): Option[Span] =
-    if (span.media_ref.contains("://")) Some(span)
-    else refs.get(span.media_ref).map(uri => span.copy(media_ref = uri))
+  def resolveMedia(span: Span, refs: Map[String, String]): Option[Span] = {
+    val ref = orEmpty(span.media_ref)
+    if (ref.contains("://")) Some(span)
+    else refs.get(ref).map(uri => span.copy(media_ref = uri))
+  }
 
   def document(doc: Document): Document = {
     if (doc.spans.isEmpty) return doc
-    val ordered = doc.spans.sortBy(s => (s.offset, s.kind, s.text))
+    // indexed: `doc.spans` is a List when Spark decodes it, and the segment
+    // scan below reads `ordered(i)` / `ordered.slice(i, j)` by position
+    val ordered = doc.spans.toIndexedSeq.sortBy(s => (s.offset, orEmpty(s.kind), textOf(s)))
     val refs    = refMap(ordered)
 
     val out = Seq.newBuilder[Span]
@@ -62,16 +70,16 @@ object Extract {
       val seg = ordered.slice(i, j)
       kind match {
         case Kind.Html =>
-          Boilerplate.extract(seg.map(_.text)).foreach { t =>
+          Boilerplate.extract(seg.map(textOf)).foreach { t =>
             out += Span(Kind.Text, t, "", 0)
           }
         case Kind.PdfGlyphs =>
-          PdfLayout.extract(seg.map(_.text)).foreach { t =>
+          PdfLayout.extract(seg.map(textOf)).foreach { t =>
             out += Span(Kind.Text, t, "", 0)
           }
         case Kind.Text =>
           seg.foreach { s =>
-            val t = Boilerplate.collapseWs(Option(s.text).getOrElse(""))
+            val t = Boilerplate.collapseWs(textOf(s))
             if (t.nonEmpty) out += Span(Kind.Text, t, "", 0)
           }
         case Kind.Image | Kind.Table =>

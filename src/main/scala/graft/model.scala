@@ -30,7 +30,13 @@ object Span {
 /** One document: unit of work, processed independently (no cross-document
   * state — mirrors the reference's one-request-one-PDF model,
   * /root/reference/app.py:233-243). */
-final case class Document(doc_id: String, spans: Seq[Span])
+final case class Document(
+    doc_id: String,
+    // a List whenever Spark's encoder decodes a Document (`Corpus` builds
+    // Lists too), so `spans(i)` walks from the head: per-document code
+    // iterates it, or converts it once with `toIndexedSeq` before reading
+    // it by position
+    spans: Seq[Span])
 
 /** Exploded span row used by golden-diff joins: `pos` is the rank of the
   * span inside its document (order is part of the equality contract —
