@@ -92,10 +92,8 @@ object Bench {
       val xs = passes.map(_(n))
       n -> (if (xs.exists(_ < 0)) -1.0 else median(xs))
     }
-    // First-pass (COLD) times alongside the medians: memo-backed queries
-    // (banded-signature memo, k-means codebook memo) pay their shared pass
-    // only in pass 0, so the median alone is a warm-cache figure — the
-    // cold column is what a standalone query run would cost (ADVICE r3).
+    // First-pass (COLD) times alongside the medians: every pass does the
+    // same work, so the first differs only by JIT and codegen warm-up.
     val cold = names.map(n => n -> passes.head(n))
 
     // ---- extraction throughput from a PRE-MATERIALIZED corpus ----
@@ -110,18 +108,11 @@ object Bench {
       })
     }
 
-    // ---- signature-hash A/B: oracle-portable md5 vs production xxhash64 ----
-    // The md5-derived hex32 keeps every signature bit-exact against the
-    // DuckDB oracle; hex32Fast (xxhash64) is the documented production
-    // swap. This measures the SAME banded-signature pass under both so
-    // the "~10x" claim is a number, not an assertion.
-    val (sigMd5Sec, sigXxSec) = if (only.isDefined) (0.0, 0.0) else {
+    // ---- the banded-signature pass alone over the documents table ----
+    val sigMd5Sec = if (only.isDefined) 0.0 else {
       val corpus = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
-      val m = median((0 until reps).map(_ =>
+      median((0 until reps).map(_ =>
         timed(runNoop(graft.operators.Dedup.bandedKeysFor(corpus)))))
-      val x = median((0 until reps).map(_ =>
-        timed(runNoop(graft.operators.Dedup.bandedKeysFor(corpus, fastHash = true)))))
-      (m, x)
     }
 
     // ---- skew stress: hot-key corpus through the capped LSH pipeline ----
@@ -152,7 +143,7 @@ object Bench {
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"queries_cold":$qsc,"sf":"$sfDir",""" +
         f""""reps":$reps,"extract_docs":$exN,"extract_sec":$exSec%.3f,""" +
         f""""extract_docs_per_sec":${if (exSec == 0.0) 0.0 else exN / exSec}%.1f,"cpus":$cpus,""" +
-        f""""sig_md5_sec":$sigMd5Sec%.3f,"sig_xx_sec":$sigXxSec%.3f,""" +
+        f""""sig_md5_sec":$sigMd5Sec%.3f,""" +
         f""""skew_lsh_sec":$skewSec%.3f,"skew_hot_copies":$hotCopies,""" +
         f""""skew_max_band":$skewMaxBand,"skew_dropped_rows":$skewDropped}""")
     spark.stop()

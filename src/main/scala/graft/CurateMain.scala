@@ -20,7 +20,6 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * under `<outDir>/stages/` —
   *   deduped/  quality gate + exact dedup (doc_id, text)
   *   banded/   the MinHash banded-signature frame (doc_id, band, k1, k2)
-  *             — the in-session memo made DURABLE
   *   clusters/ near-dup cluster labels (doc_id, cluster_id)
   * A stage table is valid iff its `_SUCCESS` marker exists (Spark's
   * commit protocol writes it last, so a killed run leaves an invalid
@@ -44,46 +43,46 @@ object CurateMain {
 
   private def valid(p: String): Boolean = Files.exists(Paths.get(p, "_SUCCESS"))
 
-  /** Run (or resume) the curation pipeline; returns the lineage JSON.
-    *
-    * `SPARK_GRAFT_HASH=xx` switches the banded-signature stage to the
-    * production xxhash64 token hash (cheaper digests, not
-    * DuckDB-oracle-portable — see `TextKernels.hex32Fast`). The mode is
-    * recorded in `STAGES.json` and a resume under the OTHER mode fails
-    * loudly instead of silently mixing signatures from two hash families
+  /** The integer fields of a committed `STAGES.json`, after checking that
+    * its banded/ stage was written under this engine's signature rule.
+    * Stage dirs from the removed xxhash64 mode (`"fastHash":1`) are
+    * rejected too: their band keys never match md5-derived signatures, so
+    * a resume or ingest against them would silently find no near-dups
     * (same fail-loud contract as ExtractMain's BUCKETING.json). */
+  private def readMarker(marker: java.nio.file.Path): Map[String, Long] = {
+    val kv = "\"(\\w+)\"\\s*:\\s*(-?\\d+)".r
+      .findAllMatchIn(Files.readString(marker))
+      .map(m => m.group(1) -> m.group(2).toLong).toMap
+    require(kv.getOrElse("fastHash", 0L) == 0L,
+      s"$marker was written by the removed xxhash64 signature mode " +
+        "(\"fastHash\":1): its banded/ stage is " +
+        "incompatible with md5-derived signatures — use a fresh outDir")
+    val rule = kv.getOrElse("sigRule", 1L)
+    require(rule == SigRule,
+      s"$marker records signature rule $rule but this engine writes " +
+        s"rule $SigRule: the durable banded/ stage is incompatible — " +
+        "use a fresh outDir")
+    kv
+  }
+
+  /** Run (or resume) the curation pipeline; returns the lineage JSON. */
   def run(spark: SparkSession, input: String, outDir: String): String = {
-    val t0       = System.nanoTime()
-    val marker   = Paths.get(outDir, "STAGES.json")
-    val fastHash = sys.env.get("SPARK_GRAFT_HASH").contains("xx")
+    val t0     = System.nanoTime()
+    val marker = Paths.get(outDir, "STAGES.json")
 
     def rawCorpus: DataFrame =
       spark.read.parquet(input).select(col("doc_id"), col("text"))
 
     val (nRaw, nBuckets) =
       if (Files.exists(marker)) {
-        val kv = "\"(\\w+)\"\\s*:\\s*(-?\\d+)".r
-          .findAllMatchIn(Files.readString(marker))
-          .map(m => m.group(1) -> m.group(2).toLong).toMap
-        val recorded = kv.getOrElse("fastHash", 0L) == 1L
-        require(recorded == fastHash,
-          s"$marker was written with fastHash=$recorded but this run has " +
-            s"fastHash=$fastHash (SPARK_GRAFT_HASH): resuming would mix " +
-            "signatures from two hash families — rerun with the original " +
-            "mode or a fresh outDir")
-        val rule = kv.getOrElse("sigRule", 1L)
-        require(rule == SigRule,
-          s"$marker records signature rule $rule but this engine writes " +
-            s"rule $SigRule: the durable banded/ stage is incompatible — " +
-            "use a fresh outDir")
+        val kv = readMarker(marker)
         (kv("nRaw"), kv("nBuckets"))
       } else {
         val n  = rawCorpus.count()
         val nb = Curation.packBucketsFor(n)
         Files.createDirectories(marker.getParent)
         Files.write(marker,
-          (s"""{"nRaw":$n,"nBuckets":$nb,"fastHash":${if (fastHash) 1 else 0},""" +
-            s""""sigRule":$SigRule}""").getBytes(StandardCharsets.UTF_8),
+          s"""{"nRaw":$n,"nBuckets":$nb,"sigRule":$SigRule}""".getBytes(StandardCharsets.UTF_8),
           StandardOpenOption.CREATE_NEW)
         (n, nb)
       }
@@ -100,7 +99,7 @@ object CurateMain {
       Curation.exactDedupKeepers(Curation.qualityGate(rawCorpus))
     }
     val banded = stage(s"$outDir/stages/banded") {
-      Dedup.bandedKeysFor(deduped, fastHash)
+      Dedup.bandedKeysFor(deduped)
     }
     val clusters = stage(s"$outDir/stages/clusters") {
       Dedup.connectedComponents(
@@ -130,9 +129,7 @@ object CurateMain {
 
   /** Incremental-ingest mode: classify a NEW batch against the pipeline's
     * durable stage tables without recomputing them — `deduped/` is the
-    * exact-hash index, `banded/` the near-dup signature index (built
-    * under whatever hash mode STAGES.json records; the batch side uses
-    * the same mode, fail-loud on mismatch by construction). Writes the
+    * exact-hash index, `banded/` the near-dup signature index. Writes the
     * (doc_id, status) classification to `<outDir>/ingest/<runId>/` and
     * returns per-status counts as the lineage JSON. An ingest run pays
     * only the batch's signature pass + index-side scans — never
@@ -143,13 +140,7 @@ object CurateMain {
     val marker = Paths.get(outDir, "STAGES.json")
     require(Files.exists(marker),
       s"$outDir has no STAGES.json — run the curation pipeline first")
-    val kv = "\"(\\w+)\"\\s*:\\s*(-?\\d+)".r
-      .findAllMatchIn(Files.readString(marker))
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
-    require(kv.getOrElse("sigRule", 1L) == SigRule,
-      s"$marker records signature rule ${kv.getOrElse("sigRule", 1L)} but " +
-        s"this engine writes rule $SigRule — the banded/ index is incompatible")
-    val fastHash = kv.getOrElse("fastHash", 0L) == 1L
+    readMarker(marker)
     Seq("deduped", "banded").foreach { st =>
       require(valid(s"$outDir/stages/$st"), s"stage table $st is missing/uncommitted")
     }
@@ -164,7 +155,7 @@ object CurateMain {
       val old    = spark.read.parquet(s"$outDir/stages/deduped")
       val banded = spark.read.parquet(s"$outDir/stages/banded")
       val newb   = spark.read.parquet(batchParquet).select(col("doc_id"), col("text"))
-      val classified = Dedup.incrementalIngest(old, banded, newb, fastHash)
+      val classified = Dedup.incrementalIngest(old, banded, newb)
       classified.write.mode("overwrite").parquet(dest)
     }
     val counts = spark.read.parquet(dest)
@@ -174,7 +165,7 @@ object CurateMain {
     def c(s: String) = counts.getOrElse(s, 0L)
     f"""{"batch":${counts.values.sum},"exactDup":${c("exact_dup")},""" +
       f""""batchDup":${c("batch_dup")},"nearDup":${c("near_dup")},""" +
-      f""""novel":${c("novel")},"fastHash":${if (fastHash) 1 else 0},""" +
+      f""""novel":${c("novel")},""" +
       f""""wallSec":$wallSec%.3f}"""
   }
 

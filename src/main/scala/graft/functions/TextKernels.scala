@@ -43,25 +43,6 @@ object TextKernels {
   def hex32Of(digest: Column, start: Int): Column =
     conv(substring(digest, start, 8), 16, 10).cast("long")
 
-  /** PRODUCTION 32-bit hash: low 32 bits of Spark's codegen'd `xxhash64`.
-    * Same contract as [[hex32]] — non-negative, < 2^32 — so the MinHash
-    * overflow-safety analysis (A·h + B < 2^62 under ANSI mode) carries
-    * over unchanged. MEASURED honestly (`graft.SigProbe`, Bench
-    * `sig_md5_sec`/`sig_xx_sec`): on the token-hash signature path the
-    * md5→xxhash64 swap is worth ~1.6× on the hash pass itself and little
-    * end-to-end at sf0.1 — the big win was removing shingle-STRING
-    * materialization ([[shingleHashes]], ~18×), after which the digest is
-    * a minor term. Kept as the production option for digest-bound
-    * deployments (very short docs, token-heavy corpora). NOT
-    * oracle-portable: DuckDB has no xxhash64 with Spark's seed, so the
-    * driver-checked catalog stays on [[hex32]]. Dedup SEMANTICS are
-    * hash-agnostic: the LSH candidate set differs per hash family, but
-    * the exact-Jaccard verify stage re-filters every candidate against
-    * the true shingle sets, so precision is exact under either hash and
-    * recall keeps the same banding profile (DedupHashStrategySpec pins
-    * both). */
-  def hex32Fast(c: Column): Column = xxhash64(c).bitwiseAND(lit(0xFFFFFFFFL))
-
   /** MinHash via universal integer hashing over ONE md5-derived base hash
     * per shingle: mh_j = min over shingles of (A_j·h + B_j) mod P. The
     * digest (the expensive part) is computed once per shingle — k minhash
@@ -81,7 +62,8 @@ object TextKernels {
     * REFERENCE implementation only (used by tests as the independent
     * string-shingle recheck): the production signature path is
     * [[tokenHashes]] + [[shingleHashes]], which never materializes
-    * shingle strings — measured 18× cheaper (see [[graft.SigProbe]]). */
+    * shingle strings — measured 18× cheaper (`BENCH/BASELINE.md`
+    * "Round-4 signature redesign"). */
   def baseHashes(shingles: Column): Column = transform(shingles, s => hex32(s))
 
   /** Shingle-hash combination constants: hash(shingle) =
@@ -99,7 +81,8 @@ object TextKernels {
   /** Word-3-gram shingle HASHES directly from token hashes — no shingle
     * strings. Building `concat_ws` shingle strings just to digest them
     * was measured to be ~95% of the signature-pass cost at sf0.1 (6.2 s
-    * of 7.0 s — string allocation, not hashing: see [[graft.SigProbe]]);
+    * of 7.0 s — string allocation, not hashing: `BENCH/BASELINE.md`
+    * "Round-4 signature redesign");
     * combining the per-token hashes arithmetically gives the same
     * near-dup semantics (distinct tokens ⇒ distinct hash inputs, order
     * sensitive via the polynomial) at ~18× less cost, and at 100 TB the

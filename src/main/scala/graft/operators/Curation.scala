@@ -254,19 +254,17 @@ object Curation {
       .withColumn("shard", floor((col("cum_tokens") - col("n_tokens")) / ShardBudget))
   }
 
-  def curateStages(corpus: DataFrame, nBuckets: Long,
-      memoTag: Option[String] = None): CurationStages = {
+  def curateStages(corpus: DataFrame, nBuckets: Long): CurationStages = {
     val deduped = exactDedupKeepers(qualityGate(corpus))
       .localCheckpoint() // consumed 3× (banding, verify, keeper join)
-    val pairs    = Dedup.minhashLsh(deduped, memoTag).select("doc_a", "doc_b")
+    val pairs    = Dedup.minhashLsh(deduped).select("doc_a", "doc_b")
     val clusters = Dedup.connectedComponents(pairs)
     val keepers  = keepersFrom(deduped, clusters)
     CurationStages(deduped, clusters, keepers, packFrom(keepers, nBuckets))
   }
 
-  def curate(corpus: DataFrame, nBuckets: Long,
-      memoTag: Option[String] = None): DataFrame =
-    curateStages(corpus, nBuckets, memoTag).packed
+  def curate(corpus: DataFrame, nBuckets: Long): DataFrame =
+    curateStages(corpus, nBuckets).packed
 
   /** Keeper resolution over a (doc_id, cluster_id, quality) labeled
     * frame — the `dedup_keep_best` core, exposed so the skew suite can
@@ -470,10 +468,7 @@ object Curation {
         .unionByName(d.select((col("doc_id") + 3000000L).as("doc_id"), col("text")))
         .unionByName(d.select((col("doc_id") + 4000000L).as("doc_id"),
           lit("!! ?? !!").as("text")))
-      // the memo tag shares the banded-signature frame across repeated
-      // invocations (Bench reps) — the planted corpus is deterministic in
-      // dir, so the frame is identical every time
-      curate(corpus, nb, Some(s"$dir#curate"))
+      curate(corpus, nb)
     }),
 
     // Keep-BEST-quality duplicate-cluster resolution — the RefinedWeb/
@@ -504,7 +499,7 @@ object Curation {
           when(col("doc_id") % 2 === 1, concat(col("text"), lit(" !! ?? !! ?? !!")))
             .otherwise(col("text")).as("text"))
         .unionByName(d.select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      val pairs    = Dedup.minhashLsh(corpus, Some(s"$dir#keepbest")).select("doc_a", "doc_b")
+      val pairs    = Dedup.minhashLsh(corpus).select("doc_a", "doc_b")
       val clusters = Dedup.connectedComponents(pairs)
       val qual     = TextOps.qualityFrame(corpus).select(col("doc_id"), col("quality"))
       // labeled feeds both the keeper agg and the final join UNCACHED:
@@ -535,7 +530,7 @@ object Curation {
       val d = docs(s, dir).select(col("doc_id"), col("text"))
       val corpus = d.unionByName(d.select((col("doc_id") + 1000000L).as("doc_id"),
         concat(col("text"), lit(" zzz")).as("text")))
-      val pairs = Dedup.minhashLsh(corpus, Some(s"$dir#leak")).select("doc_a", "doc_b")
+      val pairs = Dedup.minhashLsh(corpus).select("doc_a", "doc_b")
       val sym = pairs.unionByName(
         pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       sym.filter(splitOf(col("doc_a")) === "val" && splitOf(col("doc_b")) === "train")
@@ -1335,7 +1330,7 @@ object Curation {
   /** Winnowed fingerprint rows (idCol, fp) of a (idCol, toks) frame. The
     * repartition is the CollapseProject barrier: winnowSet references
     * `hs` three times, and inlining would run the per-token digest +
-    * shingle-combine pass once per reference (the bandedKeys trick). */
+    * shingle-combine pass once per reference (the bandedKeysFor trick). */
   private def fps(df: DataFrame, idCol: String): DataFrame = df
     .withColumn("th", tokenHashes(col("toks")))
     .withColumn("hs", shingleHashes(col("th")))

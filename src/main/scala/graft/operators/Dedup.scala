@@ -121,33 +121,27 @@ object Dedup {
   val ApCosNum = 9L  // t = ApCosNum / ApCosDen
   val ApCosDen = 10L
 
-  /** Memoized (doc_id, cluster_id) labels over the dup3 corpus —
-    * `dedup_cc_labels` (the labels themselves) and
-    * `dedup_cluster_histogram` (the size report) consume the SAME
-    * clustering, and a real pipeline materializes cluster labels once as
-    * a table and runs every report against it, never re-solving the
-    * components per consumer. Same [[frameMemo]] discipline (LRU,
-    * session-liveness, block-freeing eviction) as the signatures. */
+  /** (doc_id, cluster_id) labels over the dup3 corpus — the clustering
+    * `dedup_cc_labels` returns and `dedup_cluster_histogram` reports on.
+    * Each key computes it end to end; a pipeline that shares one
+    * clustering across reports writes it as a durable stage table
+    * (CurateMain's `clusters/`). */
   private def dup3Labels(s: SparkSession, dir: String): DataFrame =
-    frameMemo(Some(s"$dir#dup3-cc"),
-      connectedComponents(
-        minhashLsh(dupCorpus3(s, dir), Some(s"$dir#dup3")).select("doc_a", "doc_b")))
+    connectedComponents(minhashLsh(dupCorpus3(s, dir)).select("doc_a", "doc_b"))
 
   /** doc_id + 8 minhashes. ONE digest per TOKEN, then shingle hashes by
     * integer combination ([[graft.functions.TextKernels.shingleHashes]])
     * — shingle STRINGS are never materialized, which is where ~95% of the
     * signature-pass cost was measured to go (string allocation, not
-    * hashing: `graft.SigProbe`, 7.3 s → 0.6 s at sf0.1). Token/shingle
-    * hash columns are named so the expensive passes stay shared across
-    * the k minhash families. `fastHash = true` swaps the oracle-portable
-    * md5-derived [[graft.functions.TextKernels.hex32]] token hash for the
-    * production [[graft.functions.TextKernels.hex32Fast]] (xxhash64) —
-    * identical value contract, cheaper still, not DuckDB-checkable. */
-  private[operators] def signatures(corpus: DataFrame, fastHash: Boolean = false): DataFrame = {
-    val h: Column => Column = if (fastHash) hex32Fast else hex32
+    * hashing: 7.3 s → 0.6 s at sf0.1, `BENCH/BASELINE.md` "Round-4
+    * signature redesign"). Token/shingle hash columns are named so the
+    * expensive passes stay shared across the k minhash families. The
+    * token hash is the oracle-portable md5-derived
+    * [[graft.functions.TextKernels.hex32]]. */
+  private[operators] def signatures(corpus: DataFrame): DataFrame = {
     val mhs = (0 until MinhashK).map(j => minhash(col("hs"), j).as(s"mh$j"))
     Par.fanOut(corpus) // the per-token digest pass must not run on one scan task
-      .withColumn("th", transform(tokens(col("text")), t => h(t)))
+      .withColumn("th", tokenHashes(tokens(col("text"))))
       .withColumn("hs", shingleHashes(col("th")))
       .select(col("doc_id") +: mhs: _*)
   }
@@ -159,79 +153,16 @@ object Dedup {
     * shingle-combine pass runs ~8× per row (measured 5-6× wall at sf0.1
     * in the string-shingle era — digest-occurrence count in the plan goes
     * 18 → 1). The exchange shuffles only (doc_id, 8 longs): signatures
-    * move, text never does — which is also the at-scale shape. */
-  private def bandedKeys(corpus: DataFrame, fastHash: Boolean = false): DataFrame =
-    signatures(corpus, fastHash)
+    * move, text never does — which is also the at-scale shape.
+    * CurateMain writes this frame as its durable `banded/` stage, so a
+    * resumed run or an ingest never re-pays the signature pass. */
+  def bandedKeysFor(corpus: DataFrame): DataFrame =
+    signatures(corpus)
       .repartition(col("doc_id"))
       .select(col("doc_id"), explode(array((0 until MinhashK / 2).map(b =>
         struct(lit(b).as("band"),
           col(s"mh${2 * b}").as("k1"), col(s"mh${2 * b + 1}").as("k2"))): _*)).as("b"))
       .select(col("doc_id"), col("b.band"), col("b.k1"), col("b.k2"))
-
-  /** Per-JVM memo of a derived frame, keyed by tag — used for the
-    * banded-keys signatures, the embedding candidate pairs, and the dup3
-    * cluster labels. The signature pass (tokenize + per-token digest +
-    * shingle combine) is the shared upstream cost of the dedup family,
-    * and `dedup_minhash_lsh`, `dedup_lsh_band_stats` and
-    * `dedup_cc_labels` each need the same banded frame — a real pipeline
-    * materializes signatures (and cluster labels) ONCE as a table, not
-    * once per query. The memoized frame
-    * is localCheckpoint-materialized (tiny: doc_id + band + 2 longs per
-    * row) so later queries skip the signature pass entirely; its blocks
-    * live outside the catalog cache, so per-query `clearCache` calls do
-    * not evict it — by design: a signatures table is pipeline INPUT, not
-    * per-query state. Thread-safe for Verify's concurrent query pool
-    * (compute() locks per key, so two tags can build concurrently).
-    *
-    * Bounded, not monotone: entries beyond [[bandedMemoCap]] evict
-    * oldest-first and their checkpoint BLOCKS are unpersisted (the entry
-    * keeps a handle on the materialized RDD — dropping only the DataFrame
-    * would leak the blocks for the JVM's lifetime, since localCheckpoint
-    * storage is invisible to `clearCache`). A hit whose owning
-    * SparkSession has been stopped recomputes instead of returning a
-    * frame backed by a dead session (stop+recreate flows, notebook use). */
-  private final case class BandedEntry(df: DataFrame,
-      blocks: Option[org.apache.spark.rdd.RDD[_]], seq: Long)
-
-  @volatile private[graft] var bandedMemoCap = 8
-  private val bandedMemo = new java.util.concurrent.ConcurrentHashMap[String, BandedEntry]()
-  private val bandedMemoSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Drop every memo entry and free its checkpoint blocks (test hook /
-    * long-lived-session reset). */
-  private[graft] def bandedMemoClear(): Unit = {
-    import scala.jdk.CollectionConverters._
-    bandedMemo.keySet().asScala.toSeq.foreach(evictTag)
-  }
-
-  private def evictTag(t: String): Unit =
-    Option(bandedMemo.remove(t)).foreach { e =>
-      if (!e.df.sparkSession.sparkContext.isStopped)
-        e.blocks.foreach(_.unpersist(blocking = false))
-    }
-
-  private def frameMemo(tag: Option[String], banded: => DataFrame): DataFrame =
-    tag match {
-      case None => banded
-      case Some(t) =>
-        val entry = bandedMemo.compute(t, (_, old) =>
-          if (old != null && !old.df.sparkSession.sparkContext.isStopped) old
-          else {
-            val ck = banded.localCheckpoint()
-            // the materialized blocks belong to the LogicalRDD inside the
-            // checkpointed plan — captured here so eviction can free them
-            val rdd = ck.queryExecution.analyzed.collectFirst {
-              case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-            }
-            BandedEntry(ck, rdd, bandedMemoSeq.incrementAndGet())
-          })
-        while (bandedMemo.size > bandedMemoCap) {
-          import scala.jdk.CollectionConverters._
-          bandedMemo.asScala.toSeq.sortBy(_._2.seq).headOption
-            .foreach { case (k, _) => evictTag(k) }
-        }
-        entry.df
-    }
 
   /** Full MinHash → LSH band join → exact-Jaccard verify pipeline, in the
     * at-scale shape:
@@ -249,18 +180,8 @@ object Dedup {
     *    never for the whole corpus a second time.
     * `corpus` needs (doc_id, text); exposed corpus-in so the bench can
     * stress it with a planted hot-key corpus. */
-  def minhashLsh(corpus: DataFrame, memoTag: Option[String] = None,
-      fastHash: Boolean = false): DataFrame =
-    minhashLshFrom(corpus,
-      frameMemo(memoTag.map(t => if (fastHash) s"$t#xx" else t),
-        bandedKeys(corpus, fastHash)))
-
-  /** The banded-keys frame as a frame a caller can MATERIALIZE DURABLY
-    * (CurateMain writes it as a stage table so a resumed run never re-pays
-    * the signature pass — the at-scale shape: signatures are a table, not
-    * per-run state). */
-  def bandedKeysFor(corpus: DataFrame, fastHash: Boolean = false): DataFrame =
-    bandedKeys(corpus, fastHash)
+  def minhashLsh(corpus: DataFrame): DataFrame =
+    minhashLshFrom(corpus, bandedKeysFor(corpus))
 
   /** [[minhashLsh]] against an externally-supplied banded frame (read back
     * from a durable stage table on resume). */
@@ -286,7 +207,7 @@ object Dedup {
     // th must be a NAMED column: shingleHashes references it per shingle
     // position inside its lambda, and an inlined tokenHashes subtree
     // would re-hash every token once per reference (the winnowSet/
-    // bandedKeys CollapseProject trap — measured 2× on this query).
+    // bandedKeysFor CollapseProject trap — measured 2× on this query).
     // broadcast(ids): the survivor-id set is ids-only and small by the
     // capped-band construction, so the semi-join must never shuffle the
     // corpus TEXT by doc_id (guide §3.1) — the scan streams through a
@@ -340,7 +261,8 @@ object Dedup {
     * The per-round `count` is a scalar convergence check, not a data
     * collect. A graph that fails to converge in `maxIter` rounds (would
     * need diameter > 2^maxIter) throws instead of returning silently
-    * wrong labels. */
+    * wrong labels. `maxIter` must be at least 2: convergence is decided
+    * by comparing two rounds, so even an empty pair frame takes two. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame =
     connectedComponentsIter(pairs, maxIter)._1
 
@@ -348,6 +270,9 @@ object Dedup {
     * deep-chain property test can pin the O(log D) round count). */
   private[graft] def connectedComponentsIter(
       pairs: DataFrame, maxIter: Int = 25): (DataFrame, Int) = {
+    require(maxIter >= 2,
+      s"connectedComponents needs maxIter >= 2 (got $maxIter): convergence " +
+        "compares two consecutive rounds")
     val reliable = pairs.sparkSession.sparkContext.getCheckpointDir.isDefined
     // non-eager: the checkpoint materializes inside the round's
     // convergence action instead of as its own job — one action per
@@ -415,8 +340,8 @@ object Dedup {
   }
 
   /** Band-group size histogram + rows a [[MaxBandGroup]] cap would drop. */
-  def lshBandStats(corpus: DataFrame, memoTag: Option[String] = None): DataFrame =
-    frameMemo(memoTag, bandedKeys(corpus))
+  def lshBandStats(corpus: DataFrame): DataFrame =
+    bandedKeysFor(corpus)
       .groupBy(col("band"), col("k1"), col("k2"))
       .agg(count(lit(1)).as("g"))
       .groupBy(col("g").as("group_size"))
@@ -500,22 +425,11 @@ object Dedup {
     * band keys), not with corpus × batch — the property that makes daily
     * ingestion affordable at 100 TB standing corpora. Both band-key
     * sides carry the deterministic [[MaxBandGroup]] cap, mirrored in the
-    * oracle. */
-  /** [[incrementalClassify]] against an EXTERNAL banded-signature index —
-    * the deployment form (`CurateMain --ingest`): the standing corpus's
-    * banded table is read from its durable stage, never recomputed, so an
-    * ingest run pays only the batch's signature pass plus index-side
-    * scans of hashes and band keys. `fastHash` must match the mode the
-    * index was written with (keys from two hash families never match);
-    * the exact-Jaccard verify is hash-family-independent (always the md5
-    * token hash), so precision is identical under either mode. */
-  def incrementalIngest(old: DataFrame, bandedOld: DataFrame, newb: DataFrame,
-      fastHash: Boolean = false): DataFrame =
-    incrementalClassify(old, newb, bandedOld = Some(bandedOld), fastHash = fastHash)
-
-  private def incrementalClassify(old: DataFrame, newb: DataFrame,
-      memoTag: Option[String] = None, bandedOld: Option[DataFrame] = None,
-      fastHash: Boolean = false): DataFrame = {
+    * oracle. `bandedOld` is the standing corpus's [[bandedKeysFor]]
+    * frame; `CurateMain --ingest` reads it from its durable `banded/`
+    * stage, so an ingest run pays only the batch's signature pass plus
+    * index-side scans of hashes and band keys. */
+  def incrementalIngest(old: DataFrame, bandedOld: DataFrame, newb: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val oldH = old.select(md5(col("text")).as("h")).distinct()
     // the batch frame is MATERIALIZED once (batch-sized — at scale a real
@@ -533,12 +447,8 @@ object Dedup {
     def cap(b: DataFrame) = b.withColumn("rn", row_number().over(
         Window.partitionBy(col("band"), col("k1"), col("k2")).orderBy(col("doc_id"))))
       .filter(col("rn") <= MaxBandGroup).drop("rn")
-    val bN = cap(bandedKeys(keepers, fastHash))
-    // the standing index's banded signature table is a DURABLE artifact
-    // in a real deployment (CurateMain materializes it; `bandedOld` reads
-    // it back); the memo is its in-session stand-in — repeat ingests
-    // re-pay only the BATCH's pass
-    val bO = cap(bandedOld.getOrElse(frameMemo(memoTag, bandedKeys(old, fastHash))))
+    val bN = cap(bandedKeysFor(keepers))
+    val bO = cap(bandedOld)
     val cand = bN.as("n").join(bO.as("o"),
         col("n.band") === col("o.band") && col("n.k1") === col("o.k1") &&
           col("n.k2") === col("o.k2"))
@@ -592,7 +502,7 @@ object Dedup {
           .select((col("doc_id") + base).as("doc_id"), rev.as("text")))
         .unionByName(old.filter(col("doc_id") % 4 === 2)
           .select((col("doc_id") + 1 + base).as("doc_id"), rev.as("text")))
-      incrementalClassify(old, newb, Some(s"$dir#incold"))
+      incrementalIngest(old, bandedKeysFor(old), newb)
     }),
 
     // Per-doc MinHash signature (k=8 over word 3-gram shingles).
@@ -621,18 +531,17 @@ object Dedup {
     }),
 
     // Full MinHash → LSH band join → exact-Jaccard verify pipeline in the
-    // at-scale shape (see [[minhashLsh]]); shares the materialized banded
-    // frame with dedup_lsh_band_stats via the signature memo.
-    "dedup_minhash_lsh" -> ((s, dir) => minhashLsh(dupCorpus(s, dir), Some(s"$dir#dup2"))),
+    // at-scale shape (see [[minhashLsh]]).
+    "dedup_minhash_lsh" -> ((s, dir) => minhashLsh(dupCorpus(s, dir))),
 
     // Evaluation harness for the LSH pipeline: dupCorpus plants exactly
     // one known near-dup per doc (+1e6, " zzz"), so planted-pair recall is
     // measurable without an O(n²) brute-force truth pass, and the extras
     // count (verified pairs beyond the planted set — organic near-dups)
     // is the precision-side signal a production rollout watches before it
-    // deletes data. All 1-row side frames; shares the dup2 banded memo.
+    // deletes data. All 1-row side frames.
     "dedup_eval_pr" -> ((s, dir) => {
-      val pred = minhashLsh(dupCorpus(s, dir), Some(s"$dir#dup2"))
+      val pred = minhashLsh(dupCorpus(s, dir))
         .select(col("doc_a"), col("doc_b"))
       val planted = docs(s, dir).select(col("doc_id").as("doc_a"),
         (col("doc_id") + 1000000L).as("doc_b"))
@@ -652,7 +561,7 @@ object Dedup {
     // The 100×-scale evidence that banding stays linear: group sizes must
     // stay ~duplicate-cluster-sized, and dropped_rows > 0 is the loud
     // signal a degenerate band hit the cap.
-    "dedup_lsh_band_stats" -> ((s, dir) => lshBandStats(dupCorpus(s, dir), Some(s"$dir#dup2"))),
+    "dedup_lsh_band_stats" -> ((s, dir) => lshBandStats(dupCorpus(s, dir))),
 
     // Per-doc 64-bit SimHash (two 32-bit halves).
     "dedup_simhash" -> ((s, dir) => simhash64(docs(s, dir).select(col("doc_id"), col("text")))),
@@ -674,11 +583,10 @@ object Dedup {
     // Cluster-size distribution — the dedup REPORT a storage owner reads
     // before approving the run ("how many docs do we actually delete"):
     // per cluster size, the cluster count and the doc mass it covers,
-    // including the singleton row (docs no pair touched). Shares the
-    // memoized banded signatures and the CC machinery with
-    // dedup_cc_labels — on top of an existing clustering run this is two
-    // tiny aggregations (cluster→size, size→count) plus a two-scalar
-    // subtraction for singletons; nothing corpus-sized moves.
+    // including the singleton row (docs no pair touched). Runs the
+    // dedup_cc_labels clustering, then two tiny aggregations
+    // (cluster→size, size→count) plus a two-scalar subtraction for
+    // singletons; nothing corpus-sized moves past the clustering.
     "dedup_cluster_histogram" -> ((s, dir) => {
       val labels = dup3Labels(s, dir)
       val hist = labels.groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
@@ -771,7 +679,8 @@ object Dedup {
       // substitutes the alias's whole HOF tree into the Filter, HOFs are
       // CodegenFallback inside predicates, and the interpreted transform
       // re-evaluates the token-hash subtree per element_at — measured
-      // 38.5 s vs 0.44 s on this corpus (graft.NovProbe).
+      // 38.5 s vs 0.44 s on this corpus (`BENCH/BASELINE.md` "Round-5";
+      // PlanShapeSpec pins the plan shape).
       val d = dupCorpus(s, dir)
         .filter(size(tokens(col("text"))) >= 3)
         .withColumn("th", tokenHashes(tokens(col("text"))))
@@ -1062,7 +971,7 @@ object Dedup {
     // hash-exact. Planted near-dups = tiny deterministic perturbation;
     // threshold 0.99 separates them from the corpus's true cosine range
     // (max ≈ 0.51).
-    "dedup_embedding_cosine" -> ((s, dir) => embPairsMemo(s, dir)),
+    "dedup_embedding_cosine" -> ((s, dir) => embPairs(s, dir)),
 
     // The recall observable for the dedup path: how many verified pairs
     // each probe depth contributed. n_pairs at probe_dist=1 is EXACTLY
@@ -1070,21 +979,16 @@ object Dedup {
     // sample, you don't eyeball pair lists (`ann_recall`'s role for the
     // search path).
     "dedup_embedding_probe_stats" -> ((s, dir) =>
-      embPairsMemo(s, dir)
+      embPairs(s, dir)
         .groupBy(col("probe_dist"))
         .agg(count(lit(1)).as("n_pairs"), round(min(col("cos")), 4).as("min_cos"))))
 
-  /** Verified embedding near-dup pairs, memoized per corpus dir: the pair
-    * list is the shared upstream of BOTH embedding queries (the cosine
-    * list and its probe-depth rollup), and — like the banded-signature
-    * frame — a real pipeline materializes it once as a table. The frame is
-    * tiny (two ids + two small columns per surviving pair), so the
-    * localCheckpoint is cheap; the LSH fold, probe join and exact-cosine
-    * verify run once per dir per session instead of once per query. */
-  private def embPairsMemo(s: SparkSession, dir: String): DataFrame =
-    frameMemo(Some(s"$dir#embpairs"),
-      embeddingNearDups(dupEmbeddings(s, dir),
-        VectorKernels.planesFor(2L * emb(s, dir).count()))) // metadata-cheap count
+  /** Verified embedding near-dup pairs over the planted corpus — the
+    * upstream of both embedding queries (the cosine list and its
+    * probe-depth rollup), computed by each. */
+  private def embPairs(s: SparkSession, dir: String): DataFrame =
+    embeddingNearDups(dupEmbeddings(s, dir),
+      VectorKernels.planesFor(2L * emb(s, dir).count())) // metadata-cheap count
 
   /** documents' embeddings ∪ a perturbed copy (ids + 100,000) — the
     * planted-near-dup corpus both embedding-dedup queries run on. */

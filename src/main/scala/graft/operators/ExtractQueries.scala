@@ -181,8 +181,7 @@ object ExtractQueries {
         "xcur_golden")
       val corpus = spansToText(
         GoldenDiff.explodeSpans(ExtractJob.extract(in, numPartitions = parts)))
-      Curation.curate(corpus, Curation.packBucketsFor(XcurDocs + XcurCopies),
-        Some(s"xcur#$XcurDocs"))
+      Curation.curate(corpus, Curation.packBucketsFor(XcurDocs + XcurCopies))
     }),
 
     // The reference's field-level evaluation (EP2) end-to-end on a seeded

@@ -101,106 +101,64 @@ object Similarity {
     * cell×dimension aggregation collected back (k·dims rows). Empty
     * cells keep their previous centroid. Seeded init = the md5-derived
     * [[VectorKernels.intCentroid]]s, so both engines start identically.
-    *
-    * Memoized per corpus dir: `ann_kmeans_cells` and
-    * `ann_ivf_trained_topk` share one codebook, and at scale a codebook is
-    * trained once and SHIPPED to consumers, not re-trained per query. The
-    * value is plain driver-side data (k×dims longs), so the memo is
-    * session-independent and safe across Verify's concurrent query pool
-    * (computeIfAbsent blocks the second trainer instead of duplicating
-    * the Lloyd jobs). */
-  private val kmeansMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, IndexedSeq[IndexedSeq[Long]]]()
-
-  private def kmeansTrain(s: SparkSession, dir: String): IndexedSeq[IndexedSeq[Long]] =
-    kmeansMemo.computeIfAbsent(dir, _ => kmeansTrainUncached(s, dir))
-
-  private def kmeansTrainUncached(s: SparkSession, dir: String): IndexedSeq[IndexedSeq[Long]] = {
+    * Every query that needs the codebook trains it; sharing one across
+    * queries is a durable build stage's job, not per-query state. */
+  private def kmeansTrain(s: SparkSession, dir: String): IndexedSeq[IndexedSeq[Long]] = {
     val qdf = s.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), quantize(col("embedding")).as("q")).cache()
-    var cents: IndexedSeq[IndexedSeq[Long]] =
-      (0 until KmeansK).map(j => intCentroid(j, Dims).toIndexedSeq)
-    try {
-      (0 until KmeansIters).foreach { _ =>
-        val stats = withKmeansCell(qdf, cents)
-          .select(col("cell"), posexplode(col("q")).as(Seq("pos", "qi")))
-          .groupBy(col("cell"), col("pos"))
-          .agg(sum(col("qi")).as("s"), count(lit(1)).as("n"))
-          .collect()
-        // driver-sink guard: the collect is bounded by k·dims BY
-        // CONSTRUCTION (cell × pos rollup); a future k/dims bump that
-        // silently turns this into a data-sized collect must fail loudly
-        require(stats.length <= KmeansK * Dims,
-          s"kmeansTrain collected ${stats.length} rows > k*dims (${KmeansK * Dims})")
-        val byCell = stats.groupBy(_.getAs[Long]("cell"))
-        cents = (0 until KmeansK).map { j =>
-          byCell.get(j.toLong) match {
-            case Some(rows) =>
-              val arr = Array.fill(Dims)(0L)
-              rows.foreach { r =>
-                // floor division (Math.floorDiv == SQL floor(s/n)) — NOT
-                // truncation: engines disagree on negative int division
-                arr(r.getAs[Int]("pos")) =
-                  Math.floorDiv(r.getAs[Long]("s"), r.getAs[Long]("n"))
-              }
-              arr.toIndexedSeq
-            case None => cents(j)
-          }
-        }
-      }
-    } finally { qdf.unpersist(); () }
-    cents
+    try lloyd(qdf, (0 until KmeansK).map(j => intCentroid(j, Dims).toIndexedSeq), Dims)
+    finally { qdf.unpersist(); () }
   }
 
-  /** Product-quantization codebooks: [[PqM]] subspaces of [[PqSub]] dims,
-    * [[PqK]] codes each, trained by the same exact-integer Lloyd loop as
-    * [[kmeansTrain]] but per quantized SUBvector — so the full PQ
-    * index-build is oracle-checkable (the DuckDB twin unrolls both
-    * iterations per subspace over list slices). Memoized like the coarse
-    * codebook: train once per corpus, ship everywhere. */
-  private val pqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, IndexedSeq[IndexedSeq[IndexedSeq[Long]]]]()
-
-  private def pqTrain(s: SparkSession, dir: String): IndexedSeq[IndexedSeq[IndexedSeq[Long]]] =
-    pqMemo.computeIfAbsent(dir, _ => pqTrainUncached(s, dir))
+  /** [[KmeansIters]] exact-integer Lloyd rounds over the quantized `q`
+    * column of `qdf`, from `init` (k centroids of `dims` longs). */
+  private def lloyd(qdf: DataFrame, init: IndexedSeq[IndexedSeq[Long]],
+      dims: Int): IndexedSeq[IndexedSeq[Long]] =
+    (0 until KmeansIters).foldLeft(init) { (cents, _) =>
+      val stats = withKmeansCell(qdf, cents)
+        .select(col("cell"), posexplode(col("q")).as(Seq("pos", "qi")))
+        .groupBy(col("cell"), col("pos"))
+        .agg(sum(col("qi")).as("s"), count(lit(1)).as("n"))
+        .collect()
+      // collect guard: the collect is bounded by k·dims BY
+      // CONSTRUCTION (cell × pos rollup); a future k/dims bump that
+      // silently turns this into a data-sized collect must fail loudly
+      require(stats.length <= cents.length * dims,
+        s"Lloyd round collected ${stats.length} rows > k*dims (${cents.length * dims})")
+      val byCell = stats.groupBy(_.getAs[Long]("cell"))
+      cents.indices.map { j =>
+        byCell.get(j.toLong) match {
+          case Some(rows) =>
+            val arr = Array.fill(dims)(0L)
+            rows.foreach { r =>
+              // floor division (Math.floorDiv == SQL floor(s/n)) — NOT
+              // truncation: engines disagree on negative int division
+              arr(r.getAs[Int]("pos")) =
+                Math.floorDiv(r.getAs[Long]("s"), r.getAs[Long]("n"))
+            }
+            arr.toIndexedSeq
+          case None => cents(j)
+        }
+      }
+    }
 
   /** Seeded init for PQ subspace m, code j — disjoint from the coarse
     * codebook's seed range so the two codebooks are independent. */
   private def pqInit(m: Int, j: Int): IndexedSeq[Long] =
     intCentroid(100 * (m + 1) + j, PqSub).toIndexedSeq
 
-  private def pqTrainUncached(s: SparkSession, dir: String): IndexedSeq[IndexedSeq[IndexedSeq[Long]]] = {
+  /** Product-quantization codebooks: [[PqM]] subspaces of [[PqSub]] dims,
+    * [[PqK]] codes each, trained by the same exact-integer Lloyd loop as
+    * [[kmeansTrain]] but per quantized SUBvector — so the full PQ
+    * index-build is oracle-checkable (the DuckDB twin unrolls both
+    * iterations per subspace over list slices). A query trains the
+    * codebooks once and passes them to every code-assignment step. */
+  private def pqTrain(s: SparkSession, dir: String): IndexedSeq[IndexedSeq[IndexedSeq[Long]]] = {
     val qdf = s.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), quantize(col("embedding")).as("qf")).cache()
-    try {
-      (0 until PqM).map { m =>
-        val sub = qdf.select(col("vec_id"),
-          slice(col("qf"), m * PqSub + 1, PqSub).as("q"))
-        var cents: IndexedSeq[IndexedSeq[Long]] = (0 until PqK).map(pqInit(m, _))
-        (0 until KmeansIters).foreach { _ =>
-          val stats = withKmeansCell(sub, cents)
-            .select(col("cell"), posexplode(col("q")).as(Seq("pos", "qi")))
-            .groupBy(col("cell"), col("pos"))
-            .agg(sum(col("qi")).as("s"), count(lit(1)).as("n"))
-            .collect()
-          require(stats.length <= PqK * PqSub, // bounded-collect guard (kmeansTrain rule)
-            s"pqTrain collected ${stats.length} rows > PqK*PqSub (${PqK * PqSub})")
-          val byCell = stats.groupBy(_.getAs[Long]("cell"))
-          cents = (0 until PqK).map { j =>
-            byCell.get(j.toLong) match {
-              case Some(rows) =>
-                val arr = Array.fill(PqSub)(0L)
-                rows.foreach { r =>
-                  arr(r.getAs[Int]("pos")) =
-                    Math.floorDiv(r.getAs[Long]("s"), r.getAs[Long]("n"))
-                }
-                arr.toIndexedSeq
-              case None => cents(j)
-            }
-          }
-        }
-        cents
-      }
+    try (0 until PqM).map { m =>
+      lloyd(qdf.select(col("vec_id"), slice(col("qf"), m * PqSub + 1, PqSub).as("q")),
+        (0 until PqK).map(pqInit(m, _)), PqSub)
     } finally { qdf.unpersist(); () }
   }
 
@@ -234,15 +192,14 @@ object Similarity {
     * `ann_pq_codes`) and the IVF-PQ index build both route through it,
     * so the two cannot desync. Stays a narrow projection over the
     * caller's scan (no join, no extra shuffle). */
-  private def withPqCodes(s: SparkSession, dir: String, df: DataFrame): DataFrame = {
-    val books = pqTrain(s, dir)
+  private def withPqCodes(df: DataFrame, books: IndexedSeq[IndexedSeq[IndexedSeq[Long]]]): DataFrame =
     withCodeCol(withCodeCol(df, "qlo", books(0), "code_lo", "d_lo"),
       "qhi", books(1), "code_hi", "d_hi")
-  }
 
-  /** Corpus PQ codes (vec_id, code_lo, d_lo, code_hi, d_hi). */
-  private def pqCodes(s: SparkSession, dir: String): DataFrame =
-    withPqCodes(s, dir, pqVectors(s, dir))
+  /** Corpus PQ codes (vec_id, code_lo, d_lo, code_hi, d_hi) under `books`. */
+  private def pqCodes(s: SparkSession, dir: String,
+      books: IndexedSeq[IndexedSeq[IndexedSeq[Long]]]): DataFrame =
+    withPqCodes(pqVectors(s, dir), books)
       .select(col("vec_id"), col("code_lo"), col("d_lo"), col("code_hi"), col("d_hi"))
 
   /** IVF-PQ search body (shared by `ann_ivfpq_topk` and its recall
@@ -255,7 +212,7 @@ object Similarity {
     val base  = pqVectors(s, dir).withColumn("q", col("qf"))
     // the stored index: 3 longs per corpus vector, nothing else ships;
     // codes come from the same assignment path ann_pq_codes certifies
-    val idx = withPqCodes(s, dir, withKmeansCell(base, cents))
+    val idx = withPqCodes(withKmeansCell(base, cents), books)
       .select(col("vec_id"), col("cell"), col("code_lo"), col("code_hi"))
     val qf = withKmeansCell2(base, cents).filter(col("vec_id") < NQuery)
     val qprobes = qf.select(col("vec_id").as("query_id"),
@@ -359,26 +316,17 @@ object Similarity {
     * near-randomly (measured recall 0.04) — the reason FAISS ADC decodes
     * against the codebook instead of dotting codes. Max |d| ≈ 1.5e6, so a
     * 64-dim dot is ≤ ~1.4e14 ≪ 2^63 — exact. */
-  /** Per-dim (min, range) SQ8 training stats, memoized per corpus dir
-    * like [[kmeansMemo]]/[[pqMemo]] — the quantizer bounds are a trained
-    * codebook artifact (≤ Dims rows of driver-side longs) shipped with
-    * the index, not per-query state; the memo spares each of the three
-    * SQ queries a full quantize + per-dim min/max pass per invocation. */
-  private val sqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[Long], Seq[Long])]()
-
   private def sqCodes(s: SparkSession, dir: String): DataFrame = {
     val qz = emb(s, dir).select(col("vec_id"),
       quantize(transform(col("v"), x => x / col("nrm"))).as("q"))
-    val (mins, rngs) = sqMemo.computeIfAbsent(dir, _ => {
-      val st = qz.select(posexplode(col("q")).as(Seq("i", "x")))
-        .groupBy(col("i")).agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
-        .orderBy(col("i")).collect()
-      require(st.length <= Dims, // bounded-collect guard (kmeansTrain rule)
-        s"sqCodes collected ${st.length} rows > Dims ($Dims)")
-      (st.map(_.getLong(1)).toSeq,
-        st.map(r => math.max(1L, r.getLong(2) - r.getLong(1))).toSeq)
-    })
+    // per-dim (min, range) training stats: ≤ Dims rows, collected
+    val st = qz.select(posexplode(col("q")).as(Seq("i", "x")))
+      .groupBy(col("i")).agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
+      .orderBy(col("i")).collect()
+    require(st.length <= Dims, // bounded-collect guard (the Lloyd-round rule)
+      s"sqCodes collected ${st.length} rows > Dims ($Dims)")
+    val mins = st.map(_.getLong(1)).toSeq
+    val rngs = st.map(r => math.max(1L, r.getLong(2) - r.getLong(1))).toSeq
     qz.select(col("vec_id"), transform(col("q"), (x, i) => {
       val d = (x - element_at(typedLit(mins), i + 1)) * 255L
       val r = element_at(typedLit(rngs), i + 1)
@@ -557,8 +505,8 @@ object Similarity {
     // Reports per-cell mass + share, the global imbalance factor
     // IF = k·Σnᵢ²/N² in ppm (1.0 = perfectly balanced; FAISS re-trains
     // above ~1.5–2), and the empty-cell count (wasted codebook capacity).
-    // Reuses the memoized trained codebook — the audit rides the same
-    // assignment pass the index build already runs. Scale shape: one
+    // Trains the same codebook as ann_kmeans_cells — the audit rides the
+    // same assignment pass the index build already runs. Scale shape: one
     // narrow assignment scan → k-row partial agg; the k-row frame
     // cross-joins its own 1-row rollup. All integer-exact.
     "ann_cell_balance" -> ((s, dir) => {
@@ -620,11 +568,11 @@ object Similarity {
     // code_hi), the 100 TB move that turns a petabyte of float32
     // embeddings into a table small enough to scan for every query.
     // Codebooks are trained per subspace by the same exact-integer Lloyd
-    // loop as the coarse quantizer (memoized; the DuckDB twin unrolls
+    // loop as the coarse quantizer (the DuckDB twin unrolls
     // both iterations over list SLICES), and d_lo/d_hi expose the
     // per-subspace quantization error — the index-quality observable a
     // production build monitors before swapping a codebook in.
-    "ann_pq_codes" -> ((s, dir) => pqCodes(s, dir)),
+    "ann_pq_codes" -> ((s, dir) => pqCodes(s, dir, pqTrain(s, dir))),
 
     // PQ search with asymmetric distance computation (ADC): the query
     // stays EXACT (quantized subvectors), the corpus is its codes, and
@@ -638,7 +586,7 @@ object Similarity {
     // a trained-quantizer SEARCH path hash-exact across engines.
     "ann_pq_topk" -> ((s, dir) => {
       val books = pqTrain(s, dir)
-      val codes = pqCodes(s, dir).select(col("vec_id"), col("code_lo"), col("code_hi"))
+      val codes = pqCodes(s, dir, books).select(col("vec_id"), col("code_lo"), col("code_hi"))
       val q = pqVectors(s, dir).filter(col("vec_id") < NQuery)
       val dtLo = q.select(col("vec_id").as("query_id"), explode(array(
         (0 until PqK).map(c => struct(lit(c.toLong).as("code_lo"),
@@ -676,7 +624,7 @@ object Similarity {
     // perturbation crosses a CELL boundary or ≥2 hyperplanes (the spec
     // pins recall ≥ 85%, same observable discipline as the LSH path).
     "dedup_semantic" -> ((s, dir) => {
-      val cents  = kmeansTrain(s, dir) // trained on the base corpus, memoized
+      val cents  = kmeansTrain(s, dir) // trained on the base corpus
       val e0     = s.read.parquet(s"$dir/embeddings.parquet")
       val planes = planesFor(2L * e0.count())
       val base = e0.select(col("vec_id"), toDouble(col("embedding")).as("v"))
@@ -744,7 +692,7 @@ object Similarity {
     // nprobe/k of the corpus (partition-pruned when the index is written
     // bucketed-by-cell), and the per-query work is two dictionary joins
     // against M×k broadcast distance tables. Both codebooks are the
-    // memoized exact-integer Lloyd trainings the standalone IVF and PQ
+    // exact-integer Lloyd trainings the standalone IVF and PQ
     // paths already oracle-check, so the composite stays hash-exact:
     // the DuckDB twin chains both unrolled trainings and mirrors the
     // probe + ADC joins. Cells partition the corpus and (cell, cell2)
@@ -855,7 +803,7 @@ object Similarity {
     // a corpus scan.
     "ann_pq_rerank" -> ((s, dir) => {
       val books = pqTrain(s, dir)
-      val codes = pqCodes(s, dir).select(col("vec_id"), col("code_lo"), col("code_hi"))
+      val codes = pqCodes(s, dir, books).select(col("vec_id"), col("code_lo"), col("code_hi"))
       val probes = s.read.parquet(s"$dir/embeddings.parquet")
         .filter(col("vec_id") < NQuery)
         .select((col("vec_id") + 100000L).as("query_id"), col("vec_id").as("golden"),

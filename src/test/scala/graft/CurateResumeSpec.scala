@@ -61,6 +61,20 @@ class CurateResumeSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(resumed2Set == resumedSet)
   }
 
+  test("stage dirs from the removed xxhash64 mode are rejected by resume and ingest") {
+    val out = Files.createTempDirectory("curate-fasthash")
+    Files.writeString(out.resolve("STAGES.json"),
+      """{"nRaw":10,"nBuckets":2,"fastHash":1,"sigRule":2}""")
+    val resume = intercept[IllegalArgumentException] {
+      CurateMain.run(spark, s"$out/no-input", out.toString)
+    }
+    assert(resume.getMessage.contains("removed xxhash64"), resume.getMessage)
+    val ingest = intercept[IllegalArgumentException] {
+      CurateMain.ingest(spark, out.toString, s"$out/no-batch", "r1")
+    }
+    assert(ingest.getMessage.contains("removed xxhash64"), ingest.getMessage)
+  }
+
   test("--ingest classifies a new batch off the durable index, input long gone") {
     val tmp   = Files.createTempDirectory("curate-ingest").toString
     val input = s"$tmp/input"

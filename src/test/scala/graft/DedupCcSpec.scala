@@ -42,6 +42,23 @@ class DedupCcSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(e.getMessage.contains("did not converge"))
   }
 
+  test("connectedComponents: an empty pair frame converges in 2 rounds with no labels") {
+    import spark.implicits._
+    val pairs = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
+    val (labels, iters) = Dedup.connectedComponentsIter(pairs, maxIter = 2)
+    assert(labels.count() == 0)
+    assert(iters == 2)
+  }
+
+  test("connectedComponents: maxIter below 2 is rejected up front") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L)).toDF("doc_a", "doc_b")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.connectedComponentsIter(pairs, maxIter = 1)
+    }
+    assert(e.getMessage.contains("maxIter >= 2"), e.getMessage)
+  }
+
   test("connectedComponents: uses reliable checkpointing when a checkpoint dir is set") {
     import spark.implicits._
     val ckDir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt")

@@ -160,7 +160,7 @@ class OperatorCatalogSpec extends AnyFunSuite with SparkSessionTestWrapper {
       val split = corpus.select(col("doc_id"),
         when(hex32(concat(lit("split:"), col("doc_id").cast("string"))) % 100 < 90,
           lit("train")).otherwise(lit("val")).as("split"))
-      val pairs = graft.operators.Dedup.minhashLsh(corpus, Some(s"$dir#leak"))
+      val pairs = graft.operators.Dedup.minhashLsh(corpus)
         .select("doc_a", "doc_b")
       val sym = pairs.unionByName(
         pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))

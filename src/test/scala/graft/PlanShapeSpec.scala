@@ -959,7 +959,8 @@ class PlanShapeSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // pushing a predicate through a projection substitutes the alias's
     // expression tree into the Filter; HOFs are CodegenFallback inside
     // predicates and re-evaluate subtrees per element — md5 appearing in
-    // any Filter node is the 60× regression NovProbe measured
+    // any Filter node is the 60× regression measured in
+    // `BENCH/BASELINE.md` "Round-5 (2026-08-20)"
     val p = plan("dedup_novelty")
     val badFilter = p.linesIterator.exists(l =>
       l.contains("Filter") && l.contains("md5"))
