@@ -94,6 +94,9 @@ object Bench {
     }
     // First-pass (COLD) times alongside the medians: every pass does the
     // same work, so the first differs only by JIT and codegen warm-up.
+    // The first key in sorted order also pays the session-wide warm-up:
+    // the lineitem warm-up above does not exercise the catalog's code
+    // paths, so that key's cold time is inflated beyond its own warm-up.
     val cold = names.map(n => n -> passes.head(n))
 
     // ---- extraction throughput from a PRE-MATERIALIZED corpus ----

@@ -2,8 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import graft.streaming.StreamingOps.{SpanEvent, UserEvent}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.Temporal.RangeWindowUs
+import graft.streaming.StreamingOps.{
+  EnrichEvent, FetchReq, RangeEvent, SpanEvent, TaggedEvent, UserEvent}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -36,17 +38,15 @@ object StreamingQueries {
     * the operators misbehaved — so the feed is capped loudly: the
     * `limit(cap+1)` bounds what ever reaches the driver, and exceeding
     * the cap fails with instructions instead of an OOM. */
-  private val ReplayMaxRows = 1000000
+  private[graft] val ReplayMaxRows = 1000000
 
-  private implicit class BoundedCollect[T](ds: org.apache.spark.sql.Dataset[T]) {
-    def collectBounded(): Array[T] = {
-      val rows = ds.limit(ReplayMaxRows + 1).collect()
-      require(rows.length <= ReplayMaxRows,
-        s"streaming replay harness would collect > $ReplayMaxRows input rows; " +
-          "the MemoryStream oracle harness is bounded by design — drive the " +
-          "production readStream path (StreamingOps) for inputs this size")
-      rows
-    }
+  private[graft] def collectBounded[T](ds: Dataset[T]): Array[T] = {
+    val rows = ds.limit(ReplayMaxRows + 1).collect()
+    require(rows.length <= ReplayMaxRows,
+      s"streaming replay harness would collect > $ReplayMaxRows input rows; " +
+        "the MemoryStream oracle harness is bounded by design — drive the " +
+        "production readStream path (StreamingOps) for inputs this size")
+    rows
   }
 
   /** Chronological replay batches. Two halves: every stateful operator
@@ -55,7 +55,7 @@ object StreamingQueries {
     * full state-store commit round — at the replay's volume the
     * scheduling fixed cost dominates, so fewer, larger batches buy wall
     * time with no loss of semantics (the watermark still only advances). */
-  private def quarters[T](rows: Seq[T]): Seq[Seq[T]] = {
+  private def halves[T](rows: Seq[T]): Seq[Seq[T]] = {
     val step = math.max(1, (rows.size + 1) / 2)
     rows.grouped(step).toSeq
   }
@@ -63,10 +63,13 @@ object StreamingQueries {
   /** Isolated session for one streaming replay: shares the SparkContext
     * but carries its own SQLConf, so the state-store partition count can
     * be sized to the replay's tiny per-batch volume (4 instead of the
-    * session's 32 — 8x fewer state-store tasks per micro-batch) without
-    * racing the concurrently-running batch queries in Verify's pool.
-    * Aggregation results are partitioning-independent, so outputs are
-    * unchanged. */
+    * session's `SPARK_GRAFT_CPUS` — fewer state-store tasks per
+    * micro-batch) without racing the concurrently-running batch queries
+    * in Verify's pool. The interval joins gain twice: the symmetric hash
+    * join keeps TWO keyed state stores per shuffle partition and
+    * checkpoints delta files for each per micro-batch. State
+    * hash-distributes the same way at any count and aggregation results
+    * are partitioning-independent, so outputs are unchanged. */
   private def replaySession(s: SparkSession): SparkSession = {
     val ss = s.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", "4")
@@ -78,6 +81,38 @@ object StreamingQueries {
     ss
   }
 
+  /** Starts `op` into a uniquely named memory sink (Verify runs several
+    * replays at once in one session), runs each step's feed as its own
+    * micro-batch in order, stops the query and returns the sink table. */
+  private def run(ss: SparkSession, op: DataFrame, mode: String = "append")(
+      steps: Seq[() => Unit]): DataFrame = {
+    val name = s"replay_${qId.incrementAndGet()}"
+    val q = op.writeStream.format("memory").queryName(name).outputMode(mode).start()
+    try steps.foreach { feed => feed(); q.processAllAvailable() }
+    finally q.stop()
+    ss.table(name)
+  }
+
+  /** [[run]] over one MemoryStream: each batch is one micro-batch, in
+    * order; sentinels are trailing batches. */
+  private def replay[T: Encoder](ss: SparkSession, batches: Seq[Seq[T]], mode: String = "append")(
+      op: Dataset[T] => Dataset[_]): DataFrame = {
+    val in = MemoryStream[T](implicitly[Encoder[T]], ss.sqlContext)
+    run(ss, op(in.toDS()).toDF(), mode)(batches.map[() => Unit](b => () => in.addData(b)))
+  }
+
+  /** The events table's `(user_id, ts, event_id)` where `cond` holds, in
+    * replay order: sorted by (event time, event id). */
+  private def events(ss: SparkSession, dir: String,
+                     cond: Column = lit(true)): Seq[(Long, Timestamp, Long)] = {
+    import ss.implicits._
+    collectBounded(ss.read.parquet(s"$dir/events.parquet").filter(cond)
+      .select(col("user_id").cast("long"), col("ts").cast("timestamp"),
+        col("event_id").cast("long"))
+      .as[(Long, Timestamp, Long)])
+      .sortBy(r => (r._2.getTime, r._3)).toSeq
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Tumbling 5-minute window counts per kind, computed by the streaming
     // operator (append mode: a window row exists only because the
@@ -85,24 +120,15 @@ object StreamingQueries {
     "stream_events_window" -> ((s, dir) => {
       val ss = replaySession(s)
       import ss.implicits._
-      implicit val sq = ss.sqlContext
-      val rows = ss.read.parquet(s"$dir/events.parquet")
+      val rows = collectBounded(ss.read.parquet(s"$dir/events.parquet")
         .select(col("ts").cast("timestamp").as("event_time"),
           col("event_id").cast("string").as("doc_id"), col("event_type").as("kind"))
-        .as[SpanEvent].collectBounded()
-        .sortBy(e => (e.event_time.getTime, e.doc_id))
+        .as[SpanEvent])
+        .sortBy(e => (e.event_time.getTime, e.doc_id)).toSeq
       val maxTs = rows.map(_.event_time.getTime).max
-      val in    = MemoryStream[SpanEvent]
-      val name  = s"sew_${qId.incrementAndGet()}"
-      val q = StreamingOps.windowedKindCounts(in.toDS())
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try {
-        quarters(rows.toSeq).foreach { b => in.addData(b); q.processAllAvailable() }
-        // sentinel: watermark passes every real window's end
-        in.addData(SpanEvent(new Timestamp(maxTs + 3600L * 1000), "::s::", "::sentinel::"))
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table(name)
+      // sentinel: watermark passes every real window's end
+      val sentinel = SpanEvent(new Timestamp(maxTs + 3600L * 1000), "::s::", "::sentinel::")
+      replay(ss, halves(rows) :+ Seq(sentinel))(StreamingOps.windowedKindCounts(_))
         .filter(col("kind") =!= "::sentinel::")
         .select(unix_micros(col("window_start")).as("window_start_us"),
           unix_micros(col("window_end")).as("window_end_us"),
@@ -120,26 +146,12 @@ object StreamingQueries {
     "stream_hll_window" -> ((s, dir) => {
       val ss = replaySession(s)
       import ss.implicits._
-      implicit val sq = ss.sqlContext
-      val rows = ss.read.parquet(s"$dir/events.parquet")
-        .select(col("user_id").cast("long"), col("ts").cast("timestamp"),
-          col("event_id").cast("long"))
-        .as[(Long, Timestamp, Long)].collectBounded()
-        .sortBy(r => (r._2.getTime, r._3))
-        .map(r => UserEvent(r._1, r._2))
+      val rows  = events(ss, dir).map(r => UserEvent(r._1, r._2))
       val maxTs = rows.map(_.event_time.getTime).max
-      val in    = MemoryStream[UserEvent]
-      val name  = s"shw_${qId.incrementAndGet()}"
-      val q = StreamingOps.windowedHllRegisters(in.toDS())
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try {
-        quarters(rows.toSeq).foreach { b => in.addData(b); q.processAllAvailable() }
-        // sentinel: watermark passes every real window's end (its own
-        // far-future window is filtered below by start time)
-        in.addData(UserEvent(-1L, new Timestamp(maxTs + 24 * 3600L * 1000)))
-        q.processAllAvailable()
-      } finally q.stop()
-      val regs = ss.table(name)
+      // sentinel: watermark passes every real window's end (its own
+      // far-future window is filtered below by start time)
+      val sentinel = UserEvent(-1L, new Timestamp(maxTs + 24 * 3600L * 1000))
+      val regs = replay(ss, halves(rows) :+ Seq(sentinel))(StreamingOps.windowedHllRegisters(_))
         .select(unix_micros(col("window_start")).as("window_start_us"),
           unix_micros(col("window_end")).as("window_end_us"),
           col("reg"), col("rho"))
@@ -155,28 +167,13 @@ object StreamingQueries {
     "stream_sessionize" -> ((s, dir) => {
       val ss = replaySession(s)
       import ss.implicits._
-      implicit val sq = ss.sqlContext
-      val rows = ss.read.parquet(s"$dir/events.parquet")
-        .select(col("user_id").cast("long"), col("ts").cast("timestamp"),
-          col("event_id").cast("long"))
-        .as[(Long, Timestamp, Long)].collectBounded()
-        .sortBy(r => (r._2.getTime, r._3))
-        .map(r => UserEvent(r._1, r._2))
+      val rows  = events(ss, dir).map(r => UserEvent(r._1, r._2))
       val maxTs = rows.map(_.event_time.getTime).max
-      val in    = MemoryStream[UserEvent]
-      val name  = s"ssz_${qId.incrementAndGet()}"
-      val q = StreamingOps.sessionize(in.toDS())
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try {
-        quarters(rows.toSeq).foreach { b => in.addData(b); q.processAllAvailable() }
-        // two sentinel batches: the first advances the watermark past every
-        // open session's (last + gap) timeout, the second fires the timeouts
-        in.addData(UserEvent(-1L, new Timestamp(maxTs + 24 * 3600L * 1000)))
-        q.processAllAvailable()
-        in.addData(UserEvent(-1L, new Timestamp(maxTs + 24 * 3600L * 1000 + 60000)))
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table(name)
+      // two sentinel batches: the first advances the watermark past every
+      // open session's (last + gap) timeout, the second fires the timeouts
+      val sentinels = Seq(0L, 60000L).map(d =>
+        Seq(UserEvent(-1L, new Timestamp(maxTs + 24 * 3600L * 1000 + d))))
+      replay(ss, halves(rows) ++ sentinels)(StreamingOps.sessionize(_))
         .filter(col("user_id") =!= -1L)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_sessions"), sum(col("n_events")).as("n_events"))
@@ -186,38 +183,26 @@ object StreamingQueries {
     // through the real watermark-gated state operator; oracle is the
     // batch twin q_asof_join's SQL VERBATIM — including DuckDB's native
     // ASOF LEFT JOIN — so the replay proves stream == batch == canonical
-    // operator. Quarter batches split clicks from their matching views
-    // across micro-batch boundaries; the pending-click buffer must honor
-    // matches that arrive in a later batch than the click.
+    // operator. The two half batches split clicks from their matching
+    // views across the micro-batch boundary; the pending-click buffer must
+    // honor matches that arrive in a later batch than the click.
     "stream_asof_join" -> ((s, dir) => {
       val ss = replaySession(s)
       import ss.implicits._
-      implicit val sq = ss.sqlContext
-      val rows = ss.read.parquet(s"$dir/events.parquet")
+      val rows = collectBounded(ss.read.parquet(s"$dir/events.parquet")
         .filter(col("event_type").isin("click", "view"))
         .select(col("user_id").cast("long"), col("ts").cast("timestamp"),
           when(col("event_type") === "click", 1).otherwise(0).as("side"),
           col("event_id").cast("long"))
-        .as[(Long, Timestamp, Int, Long)].collectBounded()
-        .sortBy(r => (r._2.getTime, r._4))
-        .map(r => StreamingOps.TaggedEvent(r._1, r._2, r._3, r._4))
+        .as[(Long, Timestamp, Int, Long)])
+        .sortBy(r => (r._2.getTime, r._4)).toSeq
+        .map(r => TaggedEvent(r._1, r._2, r._3, r._4))
       val maxTs = rows.map(_.event_time.getTime).max
-      val in    = MemoryStream[StreamingOps.TaggedEvent]
-      val name  = s"saj_${qId.incrementAndGet()}"
-      val q = StreamingOps.asofJoin(in.toDS())
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try {
-        quarters(rows.toSeq).foreach { b => in.addData(b); q.processAllAvailable() }
-        // two sentinels: advance the watermark past every pending click,
-        // then fire the event-time timeouts that flush them
-        in.addData(StreamingOps.TaggedEvent(-1L,
-          new Timestamp(maxTs + 24 * 3600L * 1000), 0, -1L))
-        q.processAllAvailable()
-        in.addData(StreamingOps.TaggedEvent(-1L,
-          new Timestamp(maxTs + 24 * 3600L * 1000 + 60000), 0, -1L))
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table(name)
+      // two sentinels: advance the watermark past every pending click,
+      // then fire the event-time timeouts that flush them
+      val sentinels = Seq(0L, 60000L).map(d =>
+        Seq(TaggedEvent(-1L, new Timestamp(maxTs + 24 * 3600L * 1000 + d), 0, -1L)))
+      replay(ss, halves(rows) ++ sentinels)(StreamingOps.asofJoin(_))
         .filter(col("user_id") =!= -1L)
         .select(col("click_id"), col("user_id"), col("view_id"), col("lag_us"))
     }),
@@ -230,40 +215,20 @@ object StreamingQueries {
     // within one batch. Oracle: q_range_join's batch SQL verbatim.
     "stream_interval_join" -> ((s, dir) => {
       val ss = replaySession(s)
-      // the symmetric hash join keeps TWO keyed state stores per shuffle
-      // partition and checkpoints delta files for each per micro-batch —
-      // at this replay's per-batch volume 4 partitions halve that fixed
-      // cost again (state hash-distributes the same way at any count)
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
       import ss.implicits._
+      val cs  = events(ss, dir, col("event_type") === "click").map(RangeEvent.tupled)
+      val es  = events(ss, dir, col("event_type") === "error").map(RangeEvent.tupled)
       implicit val sq = ss.sqlContext
-      def side(tp: String): Seq[StreamingOps.RangeEvent] = ss.read
-        .parquet(s"$dir/events.parquet")
-        .filter(col("event_type") === tp)
-        .select(col("user_id").cast("long"), col("ts").cast("timestamp"),
-          col("event_id").cast("long"))
-        .as[(Long, Timestamp, Long)].collectBounded()
-        .sortBy(r => (r._2.getTime, r._3)).toSeq
-        .map(r => StreamingOps.RangeEvent(r._1, r._2, r._3))
-      val inC  = MemoryStream[StreamingOps.RangeEvent]
-      val inE  = MemoryStream[StreamingOps.RangeEvent]
-      val name = s"sij_${qId.incrementAndGet()}"
-      val q = StreamingOps
-        .intervalJoin(inC.toDS(), inE.toDS(), graft.operators.Temporal.RangeWindowUs)
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try {
-        // ALL errors in micro-batch 0, ALL clicks in micro-batch 1: every
-        // match is found across the batch boundary from buffered error
-        // state (the strongest form of the cross-batch property) at the
-        // minimum number of state-store commit rounds. The click-side
-        // watermark stays at 0 until clicks arrive, so no error state is
-        // evicted early.
-        inE.addData(side("error"))
-        q.processAllAvailable()
-        inC.addData(side("click"))
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table(name)
+      val inC = MemoryStream[RangeEvent]
+      val inE = MemoryStream[RangeEvent]
+      // ALL errors in micro-batch 0, ALL clicks in micro-batch 1: every
+      // match is found across the batch boundary from buffered error
+      // state (the strongest form of the cross-batch property) at the
+      // minimum number of state-store commit rounds. The click-side
+      // watermark stays at 0 until clicks arrive, so no error state is
+      // evicted early.
+      run(ss, StreamingOps.intervalJoin(inC.toDS(), inE.toDS(), RangeWindowUs))(
+        Seq(() => inE.addData(es), () => inC.addData(cs)))
         .select(col("click_id"), col("error_id"), col("user_id"), col("gap_us"))
     }),
 
@@ -276,44 +241,26 @@ object StreamingQueries {
     // twin of q_range_join.
     "stream_interval_join_left" -> ((s, dir) => {
       val ss = replaySession(s)
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
       import ss.implicits._
+      val cs    = events(ss, dir, col("event_type") === "click").map(RangeEvent.tupled)
+      val es    = events(ss, dir, col("event_type") === "error").map(RangeEvent.tupled)
+      val maxMs = (cs ++ es).map(_.event_time.getTime).max
       implicit val sq = ss.sqlContext
-      def side(tp: String): Seq[StreamingOps.RangeEvent] = ss.read
-        .parquet(s"$dir/events.parquet")
-        .filter(col("event_type") === tp)
-        .select(col("user_id").cast("long"), col("ts").cast("timestamp"),
-          col("event_id").cast("long"))
-        .as[(Long, Timestamp, Long)].collectBounded()
-        .sortBy(r => (r._2.getTime, r._3)).toSeq
-        .map(r => StreamingOps.RangeEvent(r._1, r._2, r._3))
-      val inC  = MemoryStream[StreamingOps.RangeEvent]
-      val inE  = MemoryStream[StreamingOps.RangeEvent]
-      val name = s"sijl_${qId.incrementAndGet()}"
-      val q = StreamingOps.intervalJoin(inC.toDS(), inE.toDS(),
-        graft.operators.Temporal.RangeWindowUs, joinType = "left_outer")
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try {
-        val cs = side("click")
-        val es = side("error")
-        val maxMs = (cs ++ es).map(_.event_time.getTime).max
-        // same two-batch feed as stream_interval_join: all errors buffer
-        // first, all clicks match against that state across the boundary
-        inE.addData(es)
-        q.processAllAvailable()
-        inC.addData(cs)
-        q.processAllAvailable()
-        // two sentinel rounds on both sides: advance the watermark past
-        // every pending click's match window, then fire the eviction pass
-        // that emits the unmatched-left rows
-        Seq(48L, 49L).foreach { h =>
-          val t = new Timestamp(maxMs + h * 3600 * 1000)
-          inC.addData(StreamingOps.RangeEvent(-1L, t, -1L))
-          inE.addData(StreamingOps.RangeEvent(-1L, t, -2L))
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      ss.table(name)
+      val inC   = MemoryStream[RangeEvent]
+      val inE   = MemoryStream[RangeEvent]
+      // two sentinel rounds on both sides: advance the watermark past
+      // every pending click's match window, then fire the eviction pass
+      // that emits the unmatched-left rows
+      val sentinels = Seq(48L, 49L).map[() => Unit](h => () => {
+        val t = new Timestamp(maxMs + h * 3600 * 1000)
+        inC.addData(RangeEvent(-1L, t, -1L))
+        inE.addData(RangeEvent(-1L, t, -2L))
+      })
+      // same two-batch feed as stream_interval_join: all errors buffer
+      // first, all clicks match against that state across the boundary
+      run(ss, StreamingOps.intervalJoin(inC.toDS(), inE.toDS(), RangeWindowUs,
+        joinType = "left_outer"))(
+        Seq[() => Unit](() => inE.addData(es), () => inC.addData(cs)) ++ sentinels)
         .filter(col("user_id") =!= -1L)
         .select(col("click_id"), col("error_id"), col("user_id"), col("gap_us"))
     }),
@@ -329,30 +276,15 @@ object StreamingQueries {
     "stream_static_join" -> ((s, dir) => {
       val ss = replaySession(s)
       import ss.implicits._
-      implicit val sq = ss.sqlContext
-      val rows = ss.read.parquet(s"$dir/events.parquet")
-        .select(col("user_id").cast("long"), col("ts").cast("timestamp"),
-          col("event_id").cast("long"))
-        .as[(Long, Timestamp, Long)].collectBounded()
-        .sortBy(r => (r._2.getTime, r._3))
-        .map(r => StreamingOps.EnrichEvent(r._1, r._2, r._3))
-      val dim = ss.read.parquet(s"$dir/events.parquet")
+      val rows = events(ss, dir).map(EnrichEvent.tupled)
+      val dim  = ss.read.parquet(s"$dir/events.parquet")
         .select(col("user_id").cast("long")).distinct()
         .select(col("user_id"), (col("user_id") % 3).as("cohort"))
       val maxTs = rows.map(_.event_time.getTime).max
-      val in    = MemoryStream[StreamingOps.EnrichEvent]
-      val name  = s"ssj_${qId.incrementAndGet()}"
-      val q = StreamingOps.enrichedCohortCounts(in.toDS(), dim)
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try {
-        quarters(rows.toSeq).foreach { b => in.addData(b); q.processAllAvailable() }
-        // sentinel: unmatched user (dropped by the join) still advances
-        // the watermark past every real window's end
-        in.addData(StreamingOps.EnrichEvent(-1L,
-          new Timestamp(maxTs + 3600L * 1000), -1L))
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table(name)
+      // sentinel: unmatched user (dropped by the join) still advances
+      // the watermark past every real window's end
+      val sentinel = EnrichEvent(-1L, new Timestamp(maxTs + 3600L * 1000), -1L)
+      replay(ss, halves(rows) :+ Seq(sentinel))(StreamingOps.enrichedCohortCounts(_, dim))
         .select(unix_micros(col("window_start")).as("window_start_us"),
           unix_micros(col("window_end")).as("window_end_us"),
           col("cohort"), col("n_events"))
@@ -365,25 +297,18 @@ object StreamingQueries {
     "stream_dedup_exact" -> ((s, dir) => {
       val ss = replaySession(s)
       import ss.implicits._
-      implicit val sq = ss.sqlContext
-      val t0 = new Timestamp(86400L * 1000)
-      val base = ss.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)].collectBounded().sortBy(_._1)
+      val t0   = new Timestamp(86400L * 1000)
+      val base = collectBounded(ss.read.parquet(s"$dir/documents.parquet")
+        .select(col("doc_id").cast("long"), col("text")).as[(Long, String)])
+        .sortBy(_._1).toSeq
       // copies interleave with late originals across batches
       val batches = Seq(
         base.take(base.length / 2).map { case (id, tx) => (t0, id.toString, tx) },
         (base.drop(base.length / 2) ++ base.take(base.length / 2).map(r => (r._1 + 1000000L, r._2)))
           .map { case (id, tx) => (t0, id.toString, tx) },
         base.drop(base.length / 2).map { case (id, tx) => ((t0, (id + 1000000L).toString, tx)) })
-      val in   = MemoryStream[(Timestamp, String, String)]
-      val name = s"sde_${qId.incrementAndGet()}"
-      val q = StreamingOps.dedupStream(in.toDF().toDF("event_time", "doc_id", "text"))
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try {
-        batches.foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
-      } finally q.stop()
-      ss.table(name).select(col("content_hash"))
+      replay(ss, batches)(in => StreamingOps.dedupStream(in.toDF("event_time", "doc_id", "text")))
+        .select(col("content_hash"))
     }),
 
     // Streaming NEAR-dedup: documents stream in doc_id order, their
@@ -397,24 +322,17 @@ object StreamingQueries {
     "stream_dedup_near" -> ((s, dir) => {
       val ss = replaySession(s)
       import ss.implicits._
-      implicit val sq = ss.sqlContext
-      val t0 = new Timestamp(86400L * 1000)
-      val base = ss.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)].collectBounded().sortBy(_._1)
+      val t0     = new Timestamp(86400L * 1000)
+      val base   = collectBounded(ss.read.parquet(s"$dir/documents.parquet")
+        .select(col("doc_id").cast("long"), col("text")).as[(Long, String)])
+        .sortBy(_._1).toSeq
       val copies = base.map { case (id, tx) => (id + 1000000L, tx + " zzz") }
       val batches = Seq(
         base.take(base.length / 2).map { case (id, tx) => (t0, id, tx) },
         base.drop(base.length / 2).map { case (id, tx) => (t0, id, tx) },
         copies.map { case (id, tx) => (t0, id, tx) })
-      val in   = MemoryStream[(Timestamp, Long, String)]
-      val name = s"sdnr_${qId.incrementAndGet()}"
-      val q = StreamingOps.nearDedupStream(in.toDF().toDF("event_time", "doc_id", "text"))
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try {
-        batches.foreach { b => in.addData(b.toSeq); q.processAllAvailable() }
-      } finally q.stop()
-      ss.table(name)
+      replay(ss, batches)(in =>
+        StreamingOps.nearDedupStream(in.toDF("event_time", "doc_id", "text")))
         .groupBy(col("doc_id"))
         .agg(expr("bool_or(seen)").as("near_dup"))
     }),
@@ -429,21 +347,13 @@ object StreamingQueries {
     "stream_rate_limit" -> ((s, dir) => {
       val ss = replaySession(s)
       import ss.implicits._
-      implicit val sq = ss.sqlContext
-      val rows = ss.read.parquet(s"$dir/events.parquet")
+      val rows = collectBounded(ss.read.parquet(s"$dir/events.parquet")
         .select((col("user_id") % 97L).as("host_id"),
           unix_micros(col("ts").cast("timestamp")).as("us"),
           col("event_id").cast("long").as("event_id"))
-        .as[StreamingOps.FetchReq].collectBounded()
-        .sortBy(e => (e.us, e.event_id))
-      val in   = MemoryStream[StreamingOps.FetchReq]
-      val name = s"srl_${qId.incrementAndGet()}"
-      val q = StreamingOps.rateLimit(in.toDS())
-        .writeStream.format("memory").queryName(name).outputMode("update").start()
-      try {
-        quarters(rows.toSeq).foreach { b => in.addData(b); q.processAllAvailable() }
-      } finally q.stop()
-      ss.table(name)
+        .as[FetchReq])
+        .sortBy(e => (e.us, e.event_id)).toSeq
+      replay(ss, halves(rows), mode = "update")(StreamingOps.rateLimit)
     }))
 
   // --- DuckDB oracles (the batch twins) -----------------------------------

@@ -1,5 +1,6 @@
 package graft
 
+import graft.streaming.StreamingQueries
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -901,6 +902,32 @@ class OperatorCatalogSpec extends AnyFunSuite with SparkSessionTestWrapper {
           s"window $wk: estimate $est vs exact $ex out of band")
       }
     } finally { out.unpersist(); () }
+  }
+
+  // the three stream leaves whose oracle is their batch twin's oracle,
+  // checked against the twin's Spark output directly
+  test("stream leaves equal their batch twins as multisets") {
+    Seq("stream_sessionize" -> "q_sessionize",
+      "stream_asof_join" -> "q_asof_join",
+      "stream_interval_join" -> "q_range_join").foreach { case (stream, batch) =>
+      val twin = SparkEntry.queries(batch)(spark, dir).cache()
+      try {
+        val out = SparkEntry.queries(stream)(spark, dir)
+          .select(twin.columns.map(col).toSeq: _*).cache()
+        try {
+          assert(twin.count() > 0, s"$batch is empty")
+          assert(out.exceptAll(twin).count() == 0, s"$stream has rows $batch lacks")
+          assert(twin.exceptAll(out).count() == 0, s"$batch has rows $stream lacks")
+        } finally { out.unpersist(); () }
+      } finally { twin.unpersist(); () }
+    }
+  }
+
+  test("the stream replay feed fails loudly past ReplayMaxRows") {
+    val e = intercept[IllegalArgumentException] {
+      StreamingQueries.collectBounded(spark.range(StreamingQueries.ReplayMaxRows + 1L))
+    }
+    assert(e.getMessage.contains("StreamingOps"), e.getMessage)
   }
 
   test("q_retention_cohorts: offset-0 is the cohort itself; retention never exceeds it") {

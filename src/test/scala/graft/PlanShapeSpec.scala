@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Load-bearing physical-plan shapes as ASSERTIONS (not just the human-
-  * review printout in PlanAudit): a regression in pushdown / broadcast /
+  * review printout from BenchExtra): a regression in pushdown / broadcast /
   * top-k strategy / shuffle count now fails CI instead of needing a
   * reviewer to spot it in `explain` output. These shapes are exactly the
   * properties that decide whether the same plan survives a 100× scale-up.
