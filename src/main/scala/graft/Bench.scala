@@ -2,7 +2,7 @@ package graft
 
 import graft.plans.ExtractJob
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main. Runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR` and the extraction kernel on a PRE-MATERIALIZED
@@ -32,15 +32,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps  = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val reps  = MainSession.positiveInt(sys.env, "SPARK_GRAFT_REPS", 3)
+    // SPARK_GRAFT_ONLY=<q1,q2> restricts to a subset (isolation A/Bs —
+    // e.g. reproducing a single query's regression outside the full
+    // catalog's cache/memory neighborhood); extraction + skew sections are
+    // skipped in that mode so the subset is all that runs.
+    // SPARK_GRAFT_SECTION=skew: run ONLY the skew-stress section, at
+    // `reps` with per-rep times reported — the catalog medians can't
+    // isolate it (it is a single end-of-run sample in a full bench, so a
+    // one-minute host burst shows up as a phantom regression).
+    val sectionOnly = sys.env.get("SPARK_GRAFT_SECTION")
+    require(sectionOnly.forall(_ == "skew"),
+      s"SPARK_GRAFT_SECTION must be 'skew', got '${sectionOnly.mkString}'")
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(SparkEntry.keys(_).toSet)
+      .orElse(sectionOnly.map(_ => Set.empty[String]))
+    val cpus  = MainSession.cpus()
+    val spark = MainSession.start("graft-bench")
     import spark.implicits._
 
     def runNoop(df: DataFrame): Unit =
@@ -65,17 +72,6 @@ object Bench {
     graft.operators.ExtractQueries.auxWrites = false
 
     // ---- query catalog: `reps` interleaved passes, per-query median ----
-    // SPARK_GRAFT_ONLY=<q1,q2> restricts to a subset (isolation A/Bs —
-    // e.g. reproducing a single query's regression outside the full
-    // catalog's cache/memory neighborhood); extraction + skew sections are
-    // skipped in that mode so the subset is all that runs.
-    // SPARK_GRAFT_SECTION=skew: run ONLY the skew-stress section, at
-    // `reps` with per-rep times reported — the catalog medians can't
-    // isolate it (it is a single end-of-run sample in a full bench, so a
-    // one-minute host burst shows up as a phantom regression).
-    val sectionOnly = sys.env.get("SPARK_GRAFT_SECTION")
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-      .orElse(sectionOnly.map(_ => Set.empty[String]))
     val names = SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
     val passes: Seq[Map[String, Double]] = (0 until reps).map { _ =>
       names.map { name =>
@@ -101,8 +97,8 @@ object Bench {
 
     // ---- extraction throughput from a PRE-MATERIALIZED corpus ----
     val exN   = sys.env.getOrElse("SPARK_GRAFT_EXTRACT_DOCS", "40000").toLong
-    val parts = cpus.toInt * 2
-    val exSec = if (only.isDefined) 0.0 else {
+    val parts = cpus * 2
+    val exSec = if (only.isDefined) None else Some {
       val exDir = s"${System.getProperty("java.io.tmpdir")}/graft-bench-corpus-$exN"
       ExtractJob.generateInputs(spark, exN, 42L, parts).write.mode("overwrite").parquet(exDir)
       median((0 until reps).map { _ =>
@@ -112,7 +108,7 @@ object Bench {
     }
 
     // ---- the banded-signature pass alone over the documents table ----
-    val sigMd5Sec = if (only.isDefined) 0.0 else {
+    val sigMd5Sec = if (only.isDefined) None else Some {
       val corpus = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
       median((0 until reps).map(_ =>
         timed(runNoop(graft.operators.Dedup.bandedKeysFor(corpus)))))
@@ -120,7 +116,7 @@ object Bench {
 
     // ---- skew stress: hot-key corpus through the capped LSH pipeline ----
     val hotCopies = 2000L
-    val (skewSec, skewMaxBand, skewDropped) = if (only.isDefined && !sectionOnly.contains("skew")) (0.0, 0L, 0L) else {
+    val skew = if (only.isDefined && !sectionOnly.contains("skew")) None else Some {
       val base = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
       val hot = base.filter(col("doc_id") === 0).select(col("text"))
         .crossJoin(spark.range(hotCopies).select((col("id") + 2000000L).as("doc_id")))
@@ -141,14 +137,15 @@ object Bench {
 
     val qs  = results.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
     val qsc = cold.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum + exSec
+    def sec(o: Option[Double]) = o.fold("null")(t => f"$t%.3f")
+    val total = results.map(_._2).filter(_ >= 0).sum + exSec.getOrElse(0.0)
     println(
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"queries_cold":$qsc,"sf":"$sfDir",""" +
-        f""""reps":$reps,"extract_docs":$exN,"extract_sec":$exSec%.3f,""" +
-        f""""extract_docs_per_sec":${if (exSec == 0.0) 0.0 else exN / exSec}%.1f,"cpus":$cpus,""" +
-        f""""sig_md5_sec":$sigMd5Sec%.3f,""" +
-        f""""skew_lsh_sec":$skewSec%.3f,"skew_hot_copies":$hotCopies,""" +
-        f""""skew_max_band":$skewMaxBand,"skew_dropped_rows":$skewDropped}""")
+        s""""reps":$reps,"extract_docs":${exSec.fold("null")(_ => exN.toString)},"extract_sec":${sec(exSec)},""" +
+        s""""extract_docs_per_sec":${exSec.fold("null")(t => f"${if (t == 0.0) 0.0 else exN / t}%.1f")},"cpus":$cpus,""" +
+        s""""sig_md5_sec":${sec(sigMd5Sec)},""" +
+        s""""skew_lsh_sec":${sec(skew.map(_._1))},"skew_hot_copies":${skew.fold("null")(_ => hotCopies.toString)},""" +
+        s""""skew_max_band":${skew.fold("null")(_._2.toString)},"skew_dropped_rows":${skew.fold("null")(_._3.toString)}}""")
     spark.stop()
   }
 }

@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-capture companion to the (frozen) [[Bench]] main — guide §1:
   * record `.explain("formatted")` for named catalog queries so plan-shape
   * claims (Exchange counts, join strategies, PushedFilters) are checkable
@@ -17,17 +15,11 @@ import org.apache.spark.sql.SparkSession
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, qlist) = args.take(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val keys  = SparkEntry.keys(qlist)
+    val spark = MainSession.start("graft-bench-extra")
     Files.createDirectories(Paths.get(outDir))
     graft.operators.ExtractQueries.auxWrites = false
-    qlist.split(",").filter(_.nonEmpty).foreach { name =>
+    keys.foreach { name =>
       val plan =
         try SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)

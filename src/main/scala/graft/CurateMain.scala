@@ -14,6 +14,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   *
   * Usage:
   *   graft.CurateMain <documentsParquet> <outDir>
+  *   graft.CurateMain --ingest <batchParquet> <outDir> [runId]
   *
   * RESUMABLE at stage boundaries (the ExtractMain-manifest idea applied
   * to curation): each expensive stage materializes to a durable table
@@ -170,35 +171,14 @@ object CurateMain {
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("--ingest")) {
-      // usage: graft.CurateMain --ingest <batchParquet> <outDir> [runId]
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-        .appName("graft-ingest")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      println(ingest(spark, args(2), args(1), args.lift(3).getOrElse("i1")))
-      spark.stop()
-      return
-    }
+    val ingestMode = args.headOption.contains("--ingest")
     val input  = args.headOption.getOrElse("/root/testdata/sf0.01/documents.parquet")
     val outDir = if (args.length > 1) args(1) else "/tmp/graft-curate-out"
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft-curate")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    println(run(spark, input, outDir))
+    val spark = MainSession.start(if (ingestMode) "graft-ingest" else "graft-curate")
+    println(
+      if (ingestMode) ingest(spark, args(2), args(1), args.lift(3).getOrElse("i1"))
+      else run(spark, input, outDir))
     spark.stop()
   }
 }

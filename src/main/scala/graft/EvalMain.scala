@@ -2,7 +2,6 @@ package graft
 
 import graft.corpus.EvalCorpus
 import graft.eval.{EvalJob, J, Normalize}
-import org.apache.spark.sql.SparkSession
 
 /** spark-submit entry point for the field-level evaluation pipeline — the
   * distributed analog of the reference's eval run
@@ -34,18 +33,10 @@ object EvalMain {
         if (args.length > 2) args(2).toDouble else 0.0,
         if (args.length > 3) args(3) else "/tmp/graft-eval-out")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft-eval")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = MainSession.start("graft-eval")
     import spark.implicits._
 
-    val parts = cpus.toInt * 2
+    val parts = MainSession.cpus() * 2
     def folderOf(i: Long) = if (i % 2 == 0) "set-clean" else "set-defect"
 
     def seededGoldens(n: Long, sd: Long) = spark.range(0, n, 1, parts).map { i =>

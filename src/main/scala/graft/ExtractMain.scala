@@ -1,7 +1,6 @@
 package graft
 
 import graft.plans.{ExtractJob, GoldenDiff, LineageAccumulator, ManifestIO}
-import org.apache.spark.sql.SparkSession
 
 /** spark-submit entry point for the extraction pipeline (BASELINE.json
   * north_rule: "spark-submit-driven at scale ... salted repartitioning,
@@ -21,7 +20,8 @@ import org.apache.spark.sql.SparkSession
   * discards output into the noop sink — isolates kernel+scan scaling from
   * sink behavior. With `--check`, also verifies the north-rule golden
   * invariant (span-sequence equality) and prints the match rate.
-  * Exit code 1 if the check fails.
+  * Exit code 1 if the check fails. The table has `SPARK_GRAFT_CPUS` × 8
+  * buckets, so a resume must run with the count that wrote it.
   */
 object ExtractMain {
   private def flagValue(args: Array[String], flag: String): Option[String] =
@@ -40,28 +40,20 @@ object ExtractMain {
     val input  = flagValue(args, "--input")
     val mat    = flagValue(args, "--materialize")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .appName("graft-extract")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val cpus = MainSession.cpus()
+    val spark = MainSession.start("graft-extract",
       // Scan-stage parallelism must track the worker count, not the 128 MB
       // default: documents decode (nested span arrays) is CPU-heavy per
       // byte, so a scan split should be small enough that every core gets
       // one — otherwise the scan stage caps the whole job at
       // inputBytes/128MB tasks (measured: a 1 GB input ran its scan on ~8
       // of 32 cores until this was sized).
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", s"${16 * 1024 * 1024}"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      "spark.sql.files.maxPartitionBytes" -> s"${16 * 1024 * 1024}",
       // v2 commit: task outputs rename into the final location at TASK
       // commit (parallel, worker-side) instead of a serial driver-side
       // job-commit pass — on a 1000-executor cluster the v1 job commit is
       // a driver O(files) stall; here it also removes a serial tail.
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version" -> "2")
 
     val lineage = new LineageAccumulator
     spark.sparkContext.register(lineage, "extract-lineage")
@@ -84,7 +76,7 @@ object ExtractMain {
         }
       })
 
-    val parts = cpus.toInt * 2 // 2 waves per core: keeps stragglers short
+    val parts = cpus * 2 // 2 waves per core: keeps stragglers short
 
     if (mat.isDefined) { // pre-materialize the input table, untimed, and exit
       val dir = mat.get
@@ -103,34 +95,32 @@ object ExtractMain {
       }
     }
 
-    // Fused single-shuffle mode (--two-shuffle opts out): the kernel stage
-    // partitions directly on the WRITE-side bucket key, so the extracted
-    // documents are never shuffled a second time for the bucketed commit.
-    // Buckets are finer (8/core instead of 2/core waves) because
-    // `repartition(n, bucketValue)` places bucket b at pmod(hash(b), n) —
-    // collisions leave some partitions holding 2-4 buckets, and many short
-    // tasks let scheduling absorb that imbalance. One full-document
-    // shuffle instead of two ≈ +20% end-to-end on the 200k-doc bench.
-    val fused    = !args.contains("--two-shuffle")
-    val nBuckets = if (fused) cpus.toInt * 8 else parts
-    val partExpr = if (fused) Some(ManifestIO.bucketExpr(nBuckets)) else None
+    // Single shuffle: the kernel stage partitions directly on the
+    // WRITE-side bucket key, so the extracted documents are never shuffled
+    // a second time for the bucketed commit. Buckets are finer (8/core
+    // instead of 2/core waves) because `repartition(n, bucketValue)` places
+    // bucket b at pmod(hash(b), n) — collisions leave some partitions
+    // holding 2-4 buckets, and many short tasks let scheduling absorb that
+    // imbalance. One full-document shuffle instead of two ≈ +20%
+    // end-to-end on the 200k-doc bench.
+    val nBuckets = cpus * 8
 
-    // Per-bucket manifest stats ride the kernel pass itself (fused mode):
+    // Per-bucket manifest stats ride the kernel pass itself:
     // ManifestIO.write then commits manifests without re-scanning the
     // written output — the Iceberg writer-metrics shape.
     val bucketAcc = new graft.plans.BucketStatsAccumulator
-    if (fused) spark.sparkContext.register(bucketAcc, "bucket-stats")
+    spark.sparkContext.register(bucketAcc, "bucket-stats")
 
     val t0  = System.nanoTime()
     val in  = ManifestIO.pruneCommitted( // resume: skip committed buckets pre-kernel
       inputDocs, outDir, nBuckets = nBuckets)
     val out = ExtractJob.extract(in, numPartitions = nBuckets,
-      lineage = Some(lineage), partitionExpr = partExpr,
-      bucketStats = if (fused) Some((bucketAcc, nBuckets, 0)) else None)
+      lineage = Some(lineage), partitionExpr = Some(ManifestIO.bucketExpr(nBuckets)),
+      bucketStats = Some((bucketAcc, nBuckets, 0)))
     val committed =
       if (noop) { out.toDF().write.format("noop").mode("overwrite").save(); Seq.empty }
       else ManifestIO.write(out, outDir, nBuckets = nBuckets, runId = runId,
-        prePartitioned = fused, statsSource = if (fused) Some(bucketAcc) else None)
+        prePartitioned = true, statsSource = Some(bucketAcc))
     val wallSec = (System.nanoTime() - t0) / 1e9
 
     val stats   = lineage.value

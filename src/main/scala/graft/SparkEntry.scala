@@ -38,6 +38,16 @@ object SparkEntry {
       WebOps.queries ++ FrontierOps.queries ++ Layout.queries ++
       ExtractQueries.queries ++ graft.streaming.StreamingQueries.queries
 
+  /** The keys of a comma-separated list, each checked against [[queries]]:
+    * a mistyped key fails here, naming it, instead of selecting nothing. */
+  def keys(list: String): Seq[String] = {
+    val ks      = list.split(",").toSeq.filter(_.nonEmpty)
+    val unknown = ks.filterNot(queries.contains)
+    require(ks.nonEmpty, s"no catalog keys in '$list'")
+    require(unknown.isEmpty, s"unknown catalog keys: ${unknown.mkString(", ")}")
+    ks
+  }
+
   /** DuckDB-equivalent ANSI SQL per query. The extraction/eval kernels are
     * covered too: their queries materialize the independent second opinion
     * (generator-side goldens / planted-defect counts) as aux parquet and

@@ -6,7 +6,7 @@
 # in the round gate.
 #
 #   tools/release_check.sh            # tests + Verify/oracles at all 3 scales
-#                                     #   + ExtractMain golden check
+#                                     #   + ExtractMain golden check and resume
 #   tools/release_check.sh --quick    # tests + sf0.01 oracles only
 #   tools/release_check.sh --scale    # full, plus one N-vs-4N scaling pair
 #
@@ -64,6 +64,18 @@ if [ "$QUICK" = 0 ]; then
   else
     RESULT[extract_golden]=FAIL; FAIL=1
     grep -E '"docs"|"goldenDocs"|Exception' /tmp/rc_extract.log | head -5 >&2
+  fi
+  # Idempotent resume: a second run into the same table commits nothing
+  # and still reads back 100% golden-equal.
+  step "ExtractMain resume into the same table"
+  if sbt -batch "runMain graft.ExtractMain 5000 42 /tmp/rc_extract rc2 --check" \
+       >/tmp/rc_extract_resume.log 2>&1 \
+     && grep -q '"bucketsCommitted":0' /tmp/rc_extract_resume.log \
+     && grep -q '"equalityPct":100.0' /tmp/rc_extract_resume.log; then
+    RESULT[extract_resume]=pass
+  else
+    RESULT[extract_resume]=FAIL; FAIL=1
+    grep -E '"docs"|"goldenDocs"|Exception' /tmp/rc_extract_resume.log | head -5 >&2
   fi
 fi
 
