@@ -58,7 +58,7 @@ object J {
     if (d == d.floor && !d.isInfinite && d.abs < 1e16) s"${d.toLong}.0"
     else d.toString
 
-  private def escape(s: String): String = {
+  private[graft] def escape(s: String): String = {
     val sb = new StringBuilder(s.length + 8)
     s.foreach {
       case '"'           => sb.append("\\\"")

@@ -195,15 +195,6 @@ object Curation {
   def dkPackBuckets(n: String): String =
     s"greatest(1, ($n + ${PackDocsPerBucket - 1}) // $PackDocsPerBucket)"
 
-  /** The curation chain's intermediate frames, exposed so a deployment
-    * main can report per-stage counts (what each stage removed) without
-    * re-deriving the pipeline. */
-  final case class CurationStages(
-      deduped: DataFrame,  // after quality gate + exact dedup (checkpointed)
-      clusters: DataFrame, // (doc_id, cluster_id) near-dup cluster labels
-      keepers: DataFrame,  // deduped minus non-keeper cluster members
-      packed: DataFrame)   // keepers + split/bucket/token/shard columns
-
   /** Exact-dedup stage in the catalog's own scale-safe shape (the
     * `dedup_exact` query, Dedup.scala): keeper ids = groupBy(content
     * hash).agg(min(doc_id)) — partial aggregation makes each map task
@@ -226,13 +217,6 @@ object Curation {
     gated.join(keepIds, Seq("doc_id"), "left_semi")
   }
 
-  /** The end-to-end curation chain over ANY (doc_id, text) corpus:
-    * quality gate → exact dedup (min doc_id per content hash) →
-    * MinHash-LSH → connected components → keeper selection → train/val
-    * split → token-budget shard packing. `nBuckets` comes from
-    * [[packBucketsFor]] over the raw corpus size (callers know their
-    * count already; keeping it a parameter avoids a second count job).
-    * See the `corpus_curate` query for the stage-by-stage scale notes. */
   /** Quality gate (stage 1): the narrow token-count scan. */
   def qualityGate(corpus: DataFrame): DataFrame =
     corpus.filter(size(tokens(col("text"))).between(5, 10000))
@@ -254,17 +238,20 @@ object Curation {
       .withColumn("shard", floor((col("cum_tokens") - col("n_tokens")) / ShardBudget))
   }
 
-  def curateStages(corpus: DataFrame, nBuckets: Long): CurationStages = {
+  /** The end-to-end curation chain over ANY (doc_id, text) corpus:
+    * quality gate → exact dedup (min doc_id per content hash) →
+    * MinHash-LSH → connected components → keeper selection → train/val
+    * split → token-budget shard packing. `nBuckets` comes from
+    * [[packBucketsFor]] over the raw corpus size (callers know their
+    * count already; keeping it a parameter avoids a second count job).
+    * See the `corpus_curate` query for the stage-by-stage scale notes. */
+  def curate(corpus: DataFrame, nBuckets: Long): DataFrame = {
     val deduped = exactDedupKeepers(qualityGate(corpus))
       .localCheckpoint() // consumed 3× (banding, verify, keeper join)
     val pairs    = Dedup.minhashLsh(deduped).select("doc_a", "doc_b")
     val clusters = Dedup.connectedComponents(pairs)
-    val keepers  = keepersFrom(deduped, clusters)
-    CurationStages(deduped, clusters, keepers, packFrom(keepers, nBuckets))
+    packFrom(keepersFrom(deduped, clusters), nBuckets)
   }
-
-  def curate(corpus: DataFrame, nBuckets: Long): DataFrame =
-    curateStages(corpus, nBuckets).packed
 
   /** Keeper resolution over a (doc_id, cluster_id, quality) labeled
     * frame — the `dedup_keep_best` core, exposed so the skew suite can
@@ -361,29 +348,17 @@ object Curation {
     // layouts are materialized per batch of PadBatch docs — 'sorted'
     // (rank by token length) vs 'arrival' (rank by doc_id) — with waste =
     // padded − Σ len as exact ppm, so the spec can assert the sort
-    // strictly dominates. Scale shape: each global rank is the
-    // q_global_shuffle TWO-PASS discipline (range-bucket, broadcast
-    // offsets frame, row_number only within bucket) — no single-partition
-    // window; the batch agg is map-side partial over (layout, batch_id).
+    // strictly dominates. Scale shape: each global rank is
+    // [[Par.globalRank]] over a range bucket of its order; the batch agg
+    // is map-side partial over (layout, batch_id).
     "q_batch_pad_waste" -> ((s, dir) => {
       val t = docs(s, dir).select(col("doc_id"),
           size(tokens(col("text"))).cast("long").as("len"))
         .filter(col("len") >= 1)
-      def ranked(bucket: Column, ord: Seq[Column], layout: String): DataFrame = {
-        val keyed = t.withColumn("bucket", bucket)
-        val offs = keyed.groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-          .withColumn("offset",
-            coalesce(sum(col("n")).over(
-              Window.orderBy(col("bucket"))
-                .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .select(col("bucket"), col("offset"))
-        val wIn = Window.partitionBy(col("bucket")).orderBy(ord: _*)
-        keyed.join(broadcast(offs), Seq("bucket"))
-          .withColumn("rank",
-            col("offset") + row_number().over(wIn).cast("long"))
+      def ranked(bucket: Column, ord: Seq[Column], layout: String): DataFrame =
+        Par.globalRank(t.withColumn("bucket", bucket), "bucket", ord, "rank")
           .select(lit(layout).as("layout"),
             expr(s"(rank - 1) div $PadBatch").as("batch_id"), col("len"))
-      }
       ranked(expr(s"len div $PadLenBand"),
           Seq(col("len"), col("doc_id")), "sorted")
         .unionByName(ranked(expr(s"doc_id div $PadArrBand"),
@@ -1054,6 +1029,7 @@ object Curation {
     // run samples per stratum (each bucket of this very shape) or drops
     // weight resolution first.
     "q_weighted_sample" -> ((s, dir) => {
+      // not Par.globalRank: this pass sums weights, not a row rank
       val d = docs(s, dir)
         .select(col("doc_id"), col("n_chars").cast("long").as("w"))
         .withColumn("bucket", expr(s"doc_id DIV $SampleBucketW"))
@@ -1246,12 +1222,11 @@ object Curation {
     // curriculum, domains interleaved round-robin so no training window
     // sees one domain back-to-back) computed WITHOUT a global sort. Two
     // scale moves: (1) the within-domain rank by (n_chars DESC, doc_id)
-    // is a distributed rank — group-count per exact sort-key value,
-    // prefix-sum the |domains|×|distinct keys| count frame into offsets
-    // (tiny; window over counts, not docs), broadcast back, row_number
-    // only WITHIN a (domain, key) tie group (partitions = tie groups,
-    // which grow with the corpus; one degenerate all-ties key is the only
-    // hot case — the q_global_shuffle hash-bucket variant handles that);
+    // is [[Par.globalRank]] with the exact sort key as the bucket, so
+    // row_number runs only WITHIN a (domain, key) tie group (partitions =
+    // tie groups, which grow with the corpus; one degenerate all-ties key
+    // is the only hot case — the q_global_shuffle hash-bucket variant
+    // handles that);
     // (2) the interleave position is ANALYTIC from the 5-row domain-count
     // table: pos(d, rk) = Σ_d' min(rk−1, n_d') + #{d' ≤ d : n_d' ≥ rk},
     // evaluated per row by a codegen'd HOF over one broadcast array — no
@@ -1264,15 +1239,8 @@ object Curation {
         .when(m20 < 18, lit("books")).when(m20 === 18, lit("code"))
         .otherwise(lit("wiki"))
       val d = docs(s, dir).select(col("doc_id"), col("n_chars"), domainOf.as("domain"))
-      val ties = d.groupBy(col("domain"), col("n_chars")).agg(count(lit(1)).as("gn"))
-      val offs = ties.withColumn("goff", coalesce(sum(col("gn")).over(
-          Window.partitionBy(col("domain")).orderBy(col("n_chars").desc)
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("domain"), col("n_chars"), col("goff"))
-      val ranked = d.join(broadcast(offs), Seq("domain", "n_chars"))
-        .withColumn("rk", col("goff") + row_number().over(
-          Window.partitionBy(col("domain"), col("n_chars"))
-            .orderBy(col("doc_id"))).cast("long"))
+      val ranked = Par.globalRank(d, "n_chars", Seq(col("doc_id")), "rk",
+        parts = Seq("domain"), desc = true)
       val nd = d.groupBy(col("domain")).agg(count(lit(1)).as("nd"))
         .agg(sort_array(collect_list(struct(col("domain"), col("nd")))).as("nds"))
       ranked.crossJoin(broadcast(nd))
@@ -1382,7 +1350,7 @@ object Curation {
 
   // --- DuckDB oracles -----------------------------------------------------
 
-  /** [[curateStages]] as a SQL chain over a `corpus(doc_id, text)` CTE
+  /** [[curate]] as a SQL chain over a `corpus(doc_id, text)` CTE
     * already in scope (caller opens `WITH RECURSIVE corpus AS (...)` —
     * recursive because the duplicate-cluster closure is a recursive CTE):
     * quality gate → exact dedup → MinHash/band/cap/candidate/verify →

@@ -204,26 +204,14 @@ object Dedup {
       .cache()
     val ids = cand.select(col("doc_a").as("doc_id"))
       .unionByName(cand.select(col("doc_b").as("doc_id"))).distinct()
-    // th must be a NAMED column: shingleHashes references it per shingle
-    // position inside its lambda, and an inlined tokenHashes subtree
-    // would re-hash every token once per reference (the winnowSet/
-    // bandedKeysFor CollapseProject trap — measured 2× on this query).
     // broadcast(ids): the survivor-id set is ids-only and small by the
     // capped-band construction, so the semi-join must never shuffle the
     // corpus TEXT by doc_id (guide §3.1) — the scan streams through a
     // broadcast hash semi-join; fanOut keeps the shingle recompute off a
     // single scan task at bench scale (no-op on a many-split input).
-    // array_distinct ONCE here, not per pair inside jaccard: a doc's set
-    // appears in every candidate pair it survives into, and the verify
-    // join ships it — pre-distincting shrinks the cached/shuffled arrays
-    // and jaccard's value is unchanged (set semantics either way)
-    val sets = corpus.join(ids, Seq("doc_id"), "left_semi")
-      .withColumn("th", tokenHashes(tokens(col("text"))))
-      .select(col("doc_id"), array_distinct(shingleHashes(col("th"))).as("sh"))
-      .cache()
-    val verified = cand
-      .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
+    val sets = shingleSets(corpus.join(ids, Seq("doc_id"), "left_semi"),
+      tokens(col("text"))).cache()
+    val verified = withPairSets(cand, sets, sets)
       .select(col("doc_a"), col("doc_b"), jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= 0.8)
       // materialize the (small) verified-pairs frame, then release the
@@ -302,9 +290,10 @@ object Dedup {
     // < 2^63 ⇒ Σ < 2^126 < 10^38. `prev` starts null (no init action):
     // round 1 always decreases some label when any pair exists, and the
     // empty-graph case converges via 0 == 0 on round 2's compare.
-    def sumOf(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("label").cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)"))).head().getDecimal(0) // null ⇔ no nodes
+    def sumOf(df: DataFrame): java.math.BigDecimal = {
+      val r = df.agg(sum(col("label").cast("decimal(38,0)")), count(lit(1))).head()
+      labelSum(r.getDecimal(0), r.getLong(1))
+    }
     var prev: java.math.BigDecimal = null
     var converged = false
     var iter      = 0
@@ -339,6 +328,16 @@ object Dedup {
     (labels.select(col("id").as("doc_id"), col("label").as("cluster_id")), iter)
   }
 
+  /** A CC round's Σlabel from its aggregate (`sum`, row count `n`): an
+    * empty frame sums to 0, and a null sum over rows throws, since a lost
+    * sum would compare equal to the next lost one and false-converge. */
+  private[graft] def labelSum(sum: java.math.BigDecimal, n: Long): java.math.BigDecimal =
+    if (sum != null) sum
+    else if (n == 0) java.math.BigDecimal.ZERO
+    else throw new IllegalStateException(
+      s"connectedComponents: the label sum over $n nodes is null (overflow or " +
+        "null labels); the convergence check cannot be trusted")
+
   /** Band-group size histogram + rows a [[MaxBandGroup]] cap would drop. */
   def lshBandStats(corpus: DataFrame): DataFrame =
     bandedKeysFor(corpus)
@@ -347,6 +346,28 @@ object Dedup {
       .groupBy(col("g").as("group_size"))
       .agg(count(lit(1)).as("n_groups"),
         sum(greatest(col("g") - MaxBandGroup, lit(0L))).as("dropped_rows"))
+
+  /** (doc_id, sh): each row's distinct shingle-hash SET over the token
+    * array `toks`. th must be a NAMED column: shingleHashes references it
+    * per shingle position inside its lambda, and an inlined tokenHashes
+    * subtree would re-hash every token once per reference (the winnowSet/
+    * bandedKeysFor CollapseProject trap — measured 2× on minhashLsh).
+    * array_distinct ONCE here, not per pair inside [[jaccard]]: a doc's
+    * set appears in every candidate pair it survives into, and the verify
+    * join ships it — pre-distincting shrinks the cached/shuffled arrays
+    * and jaccard's value is unchanged (set semantics either way). */
+  private[graft] def shingleSets(df: DataFrame, toks: Column): DataFrame =
+    df.withColumn("th", tokenHashes(toks))
+      .select(col("doc_id"), array_distinct(shingleHashes(col("th"))).as("sh"))
+
+  /** Candidate id pairs (`a`, `b`) with each side's [[shingleSets]] set
+    * joined on BY ID as `sh_a` / `sh_b`. Candidate generation shuffles
+    * ids only; the set payload joins back once per side, and only for
+    * the pairs that survive blocking. */
+  private def withPairSets(cand: DataFrame, setsA: DataFrame, setsB: DataFrame,
+      a: String = "doc_a", b: String = "doc_b"): DataFrame =
+    cand.join(setsA.select(col("doc_id").as(a), col("sh").as("sh_a")), Seq(a))
+      .join(setsB.select(col("doc_id").as(b), col("sh").as("sh_b")), Seq(b))
 
   /** |A∩B| / |A∪B| over shingle SETS, 4 dp. CONTRACT: both inputs are
     * already-distinct arrays (every caller pre-distincts at set build,
@@ -454,17 +475,12 @@ object Dedup {
           col("n.k2") === col("o.k2"))
       .select(col("n.doc_id").as("n_id"), col("o.doc_id").as("o_id")).distinct()
       .cache() // ids-only pairs; consumed by both set prunes + the verify join
-    def sets(src: DataFrame, ids: DataFrame, idc: String) =
-      src.join(ids.select(col(idc).as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-        .withColumn("th", tokenHashes(tokens(col("text"))))
-        .select(col("doc_id"), array_distinct(shingleHashes(col("th"))).as("sh"))
-    val shN = sets(keepers, cand, "n_id")
-    val shO = sets(old, cand, "o_id")
+    def sets(src: DataFrame, idc: String) = shingleSets(
+      src.join(cand.select(col(idc).as("doc_id")).distinct(), Seq("doc_id"), "left_semi"),
+      tokens(col("text")))
     // materialize the verified near-ids (tiny), then release cand: `near`
     // feeds both its own status branch and the novel anti-join
-    val near = cand
-      .join(shN.select(col("doc_id").as("n_id"), col("sh").as("sh_a")), Seq("n_id"))
-      .join(shO.select(col("doc_id").as("o_id"), col("sh").as("sh_b")), Seq("o_id"))
+    val near = withPairSets(cand, sets(keepers, "n_id"), sets(old, "o_id"), "n_id", "o_id")
       .filter(jaccard(col("sh_a"), col("sh_b")) >= 0.8)
       .select(col("n_id").as("doc_id")).distinct()
       .localCheckpoint()
@@ -605,9 +621,7 @@ object Dedup {
     // Direct n-gram Jaccard on adjacent-id pairs (the exact-verify kernel
     // in isolation, linear in corpus size).
     "dedup_ngram_jaccard" -> ((s, dir) => {
-      val d = Par.fanOut(docs(s, dir))
-        .withColumn("th", tokenHashes(tokens(col("text"))))
-        .select(col("doc_id"), array_distinct(shingleHashes(col("th"))).as("sh"))
+      val d = shingleSets(Par.fanOut(docs(s, dir)), tokens(col("text")))
       d.as("l").join(d.as("r"), col("r.doc_id") === col("l.doc_id") + 1)
         .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"),
           jaccard(col("l.sh"), col("r.sh")).as("jaccard"))
@@ -635,9 +649,7 @@ object Dedup {
         base.filter(col("doc_id") % 20 === 0 && size(col("toks")) >= QuoteMinToks)
           .select((col("doc_id") + QuoteIdOffset).as("doc_id"),
             slice(col("toks"), QuoteFrom, QuoteLen).as("toks")))
-      val d = corpus
-        .withColumn("th", tokenHashes(col("toks")))
-        .select(col("doc_id"), array_distinct(shingleHashes(col("th"))).as("sh"))
+      val d = shingleSets(corpus, col("toks"))
         .cache() // ids + int sets only; feeds postings AND both verify sides
       val post = d.select(col("doc_id"), explode(col("sh")).as("h"))
       val rare = post.groupBy(col("h")).agg(count(lit(1)).as("df"))
@@ -647,13 +659,11 @@ object Dedup {
           col("l.h") === col("r.h") && col("l.doc_id") < col("r.doc_id"))
         .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
         .distinct()
-      cand
-        .join(d.select(col("doc_id").as("doc_a"), col("sh").as("sha")), Seq("doc_a"))
-        .join(d.select(col("doc_id").as("doc_b"), col("sh").as("shb")), Seq("doc_b"))
+      withPairSets(cand, d, d)
         .select(col("doc_a"), col("doc_b"),
-          size(array_intersect(col("sha"), col("shb"))).cast("long").as("n_common"),
-          size(col("sha")).cast("long").as("size_a"),
-          size(col("shb")).cast("long").as("size_b"))
+          size(array_intersect(col("sh_a"), col("sh_b"))).cast("long").as("n_common"),
+          size(col("sh_a")).cast("long").as("size_a"),
+          size(col("sh_b")).cast("long").as("size_b"))
         .withColumn("cont_a_ppm", expr("(n_common * 1000000) div size_a"))
         .withColumn("cont_b_ppm", expr("(n_common * 1000000) div size_b"))
         .filter(greatest(col("cont_a_ppm"), col("cont_b_ppm")) >= ContainMinPpm)
@@ -681,10 +691,8 @@ object Dedup {
       // re-evaluates the token-hash subtree per element_at — measured
       // 38.5 s vs 0.44 s on this corpus (`BENCH/BASELINE.md` "Round-5";
       // PlanShapeSpec pins the plan shape).
-      val d = dupCorpus(s, dir)
-        .filter(size(tokens(col("text"))) >= 3)
-        .withColumn("th", tokenHashes(tokens(col("text"))))
-        .select(col("doc_id"), array_distinct(shingleHashes(col("th"))).as("sh"))
+      val d = shingleSets(dupCorpus(s, dir).filter(size(tokens(col("text"))) >= 3),
+          tokens(col("text")))
         .cache() // ids + int sets only; feeds postings AND per-doc sizes
       val post = d.select(col("doc_id"), explode(col("sh")).as("h"))
       val novel = post.groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
@@ -713,15 +721,12 @@ object Dedup {
     // (feature-hash, id) and (id, int) only.
     "dedup_allpairs_cosine" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val d = Par.fanOut(dupCorpus(s, dir))
-        .withColumn("th", tokenHashes(tokens(col("text"))))
-        .select(col("doc_id"),
-          array_distinct(shingleHashes(col("th"))).as("ts"))
+      val d = shingleSets(Par.fanOut(dupCorpus(s, dir)), tokens(col("text")))
         .cache() // ids + int sets only
       // doc size rides along on every posting row (one long) — joining a
       // corpus-sized size table back would be a second id shuffle
-      val post = d.select(col("doc_id"), size(col("ts")).cast("long").as("n"),
-        explode(col("ts")).as("t"))
+      val post = d.select(col("doc_id"), size(col("sh")).cast("long").as("n"),
+        explode(col("sh")).as("t"))
       val df = post.groupBy(col("t")).agg(count(lit(1)).as("df"))
       val pref = post.join(df, Seq("t"))
         .withColumn("pos", row_number().over(
@@ -736,13 +741,11 @@ object Dedup {
           col("l.t") === col("r.t") && col("l.doc_id") < col("r.doc_id"))
         .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
         .distinct()
-      cand
-        .join(d.select(col("doc_id").as("doc_a"), col("ts").as("ta")), Seq("doc_a"))
-        .join(d.select(col("doc_id").as("doc_b"), col("ts").as("tb")), Seq("doc_b"))
+      withPairSets(cand, d, d)
         .select(col("doc_a"), col("doc_b"),
-          size(array_intersect(col("ta"), col("tb"))).cast("long").as("n_common"),
-          size(col("ta")).cast("long").as("size_a"),
-          size(col("tb")).cast("long").as("size_b"))
+          size(array_intersect(col("sh_a"), col("sh_b"))).cast("long").as("n_common"),
+          size(col("sh_a")).cast("long").as("size_a"),
+          size(col("sh_b")).cast("long").as("size_b"))
         .filter(col("n_common") * col("n_common") * (ApCosDen * ApCosDen) >=
           col("size_a") * col("size_b") * (ApCosNum * ApCosNum))
         .withColumn("cos2_ppm",
@@ -755,28 +758,18 @@ object Dedup {
     // The linear-scan alternative to LSH when near-dups share a sortable
     // key (URLs, titles, leading text); total candidates = (w−1)·N
     // regardless of cluster sizes, vs LSH's Σ bucket². Scale shape: the
-    // global order comes from the SAME two-pass rank as q_global_shuffle
-    // (range bucket → per-bucket row_number + broadcast cumulative
-    // offsets — no single-partition window, and bucket = key prefix so
-    // (bucket, key, doc_id) order ≡ (key, doc_id) order); the rank pass
+    // global order is [[Par.globalRank]] with bucket = key prefix, so
+    // (bucket, key, doc_id) order ≡ (key, doc_id) order; the rank pass
     // shuffles (doc_id, 32-char key) only; shingle sets re-join BY ID
-    // for the surviving candidates (the minhashLsh payload discipline);
-    // exact-verify is the catalog's n-gram Jaccard. dupCorpus's planted
+    // for the surviving candidates ([[withPairSets]]); exact-verify is
+    // the catalog's n-gram Jaccard. dupCorpus's planted
     // copies append " zzz" — prefix-identical, so they land adjacent.
     "dedup_sorted_neighborhood" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val c = Par.fanOut(dupCorpus(s, dir))
       val keyed = c.select(col("doc_id"),
           substring(col("text"), 1, SnmKeyChars).as("key"))
         .withColumn("bucket", substring(col("key"), 1, 1))
-      val offs = keyed.groupBy(col("bucket")).agg(count(lit(1)).as("cnt"))
-        .withColumn("offset", coalesce(sum(col("cnt")).over(
-          Window.orderBy(col("bucket")).rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-        .select(col("bucket"), col("offset"))
-      val ranked = keyed.join(broadcast(offs), Seq("bucket"))
-        .withColumn("rnk", col("offset") + row_number().over(
-          Window.partitionBy(col("bucket")).orderBy(col("key"), col("doc_id"))).cast("long"))
+      val ranked = Par.globalRank(keyed, "bucket", Seq(col("key"), col("doc_id")), "rnk")
         .select(col("doc_id"), col("rnk"))
       val cand = ranked
         .withColumn("k", explode(sequence(lit(1L), lit((SnmWindow - 1).toLong))))
@@ -784,12 +777,10 @@ object Dedup {
           col("k").as("gap"))
         .join(ranked.select(col("doc_id").as("doc_b"), col("rnk").as("tr")), Seq("tr"))
         .select(col("doc_a"), col("doc_b"), col("gap"))
-      val sh = c.withColumn("th", tokenHashes(tokens(col("text"))))
-        .select(col("doc_id"), array_distinct(shingleHashes(col("th"))).as("sh"))
-      cand.join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sha")), Seq("doc_a"))
-        .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("shb")), Seq("doc_b"))
+      val sh = shingleSets(c, tokens(col("text")))
+      withPairSets(cand, sh, sh)
         .select(col("doc_a"), col("doc_b"), col("gap"),
-          jaccard(col("sha"), col("shb")).as("jaccard"))
+          jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
         .filter(col("jaccard") >= SnmMinJaccard)
     }),
 

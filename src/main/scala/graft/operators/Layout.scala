@@ -236,17 +236,9 @@ object Layout {
         col("doc_id"),
         hex32(concat(col("doc_id"), lit("|" + ShufSalt))).as("pos_key"))
         .withColumn("bucket", expr(s"pos_key DIV ${(1L << 32) / ShufBuckets}"))
-      val offs = keyed.groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-        .withColumn("offset",
-          coalesce(sum(col("n")).over(
-            Window.orderBy(col("bucket"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("bucket"), col("offset"))
-      val wIn = Window.partitionBy(col("bucket")).orderBy(col("pos_key"), col("doc_id"))
-      keyed.join(broadcast(offs), Seq("bucket"))
-        .withColumn("global_pos",
-          col("offset") + row_number().over(wIn).cast("long") - 1L)
-        .select(col("doc_id"), col("bucket"), col("pos_key"), col("global_pos"))
+      Par.globalRank(keyed, "bucket", Seq(col("pos_key"), col("doc_id")), "rank")
+        .select(col("doc_id"), col("bucket"), col("pos_key"),
+          (col("rank") - 1L).as("global_pos"))
     }))
 
   val oracles: Map[String, String] = Map(

@@ -307,10 +307,8 @@ object Search {
       // DERIVING it is a full corpus token+shingle scan, and the frame is
       // broadcast twice (sha / shb sides of the pair join); the pin makes
       // that one scan, not two.
-      val sets = t
-        .join(broadcast(cands.select("doc_id").distinct()), Seq("doc_id"))
-        .select(col("doc_id"),
-          array_distinct(shingleHashes(tokenHashes(col("toks")))).as("sh"))
+      val sets = Dedup.shingleSets(
+          t.join(broadcast(cands.select("doc_id").distinct()), Seq("doc_id")), col("toks"))
         .cache()
       val sims = cands.select(col("query_id"), col("doc_id").as("a"))
         .join(cands.select(col("query_id"), col("doc_id").as("b")),

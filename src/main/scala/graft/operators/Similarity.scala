@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorKernels._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -162,22 +162,42 @@ object Similarity {
     } finally { qdf.unpersist(); () }
   }
 
-  /** Per-subspace code assignment with CALLER-NAMED output columns (the
-    * [[withKmeansCell]] shape, needed twice in one frame for PQ's two
-    * subspaces): argmin over distances projected once as named columns,
-    * first-wins (smallest code) tie-break. */
+  /** Runs `f` over `df` plus the squared distances from quantized `qcol`
+    * to each literal centroid, projected ONCE as named columns
+    * `<prefix>kd<j>` and dropped after `f` (the IVF lesson: conditional
+    * branches are not subexpression-eliminated, so inlining the 64-dim
+    * folds into every `when` of an argmin would evaluate each ~3x per
+    * row; a multi-referenced non-trivial named column also blocks
+    * CollapseProject from re-inlining). */
+  private def withDistances(df: DataFrame, qcol: String,
+      cents: IndexedSeq[IndexedSeq[Long]], prefix: String)(
+      f: (DataFrame, IndexedSeq[Column]) => DataFrame): DataFrame = {
+    val names = cents.indices.map(j => s"${prefix}kd$j")
+    val withD = cents.indices.foldLeft(df)((d, j) =>
+      d.withColumn(names(j), intDist2(col(qcol), cents(j))))
+    f(withD, names.map(col)).drop(names: _*)
+  }
+
+  /** (index of the smallest of `ds`, that smallest value); ties go to the
+    * first, i.e. the smallest index. */
+  private def argmin(ds: Seq[Column]): (Column, Column) = {
+    val dmin = least(ds: _*)
+    (ds.zipWithIndex.foldRight(lit(-1L)) { case ((d, j), acc) =>
+      when(d === dmin, lit(j.toLong)).otherwise(acc)
+    }, dmin)
+  }
+
+  /** Appends `codeName` (the nearest of `cents` to quantized `qcol`,
+    * first-wins, so the smallest code on ties) and `distName` (its
+    * squared distance). Output columns are CALLER-NAMED because PQ
+    * needs the assignment twice in one frame, once per subspace. */
   private def withCodeCol(df: DataFrame, qcol: String,
       cents: IndexedSeq[IndexedSeq[Long]],
-      codeName: String, distName: String): DataFrame = {
-    val withD = cents.indices.foldLeft(df)((d, j) =>
-      d.withColumn(s"${codeName}_kd$j", intDist2(col(qcol), cents(j))))
-    val dmin = least(cents.indices.map(j => col(s"${codeName}_kd$j")): _*)
-    val code = cents.indices.foldRight(lit(-1L)) { case (j, acc) =>
-      when(col(s"${codeName}_kd$j") === dmin, lit(j.toLong)).otherwise(acc)
+      codeName: String, distName: String): DataFrame =
+    withDistances(df, qcol, cents, s"${codeName}_") { (d, ds) =>
+      val (code, dmin) = argmin(ds)
+      d.withColumn(codeName, code).withColumn(distName, dmin)
     }
-    withD.withColumn(codeName, code).withColumn(distName, dmin)
-      .drop(cents.indices.map(j => s"${codeName}_kd$j"): _*)
-  }
 
   /** Quantized corpus with both PQ subvector columns. */
   private def pqVectors(s: SparkSession, dir: String): DataFrame =
@@ -239,48 +259,24 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("adc"))
   }
 
-  /** Adds (cell, d2) to a frame carrying quantized `q`, against literal
-    * centroids — the k distances are projected ONCE as named columns and
-    * the argmin/least read the attributes (the IVF lesson: conditional
-    * branches are not subexpression-eliminated, so inlining the 64-dim
-    * folds into every `when` would evaluate each ~3x per row; a
-    * multi-referenced non-trivial named column also blocks
-    * CollapseProject from re-inlining). First-wins tie-break = smallest
-    * cell id. */
+  /** Adds (cell, d2) to a frame carrying quantized `q`: the nearest of the
+    * literal centroids (smallest cell id on ties) and its distance. */
   private def withKmeansCell(df: DataFrame,
-      cents: IndexedSeq[IndexedSeq[Long]]): DataFrame = {
-    val withD = cents.indices.foldLeft(df)((d, j) =>
-      d.withColumn(s"kd$j", intDist2(col("q"), cents(j))))
-    val dmin = least(cents.indices.map(j => col(s"kd$j")): _*)
-    val cell = cents.indices.foldRight(lit(-1L)) { case (j, acc) =>
-      when(col(s"kd$j") === dmin, lit(j.toLong)).otherwise(acc)
-    }
-    withD.withColumn("cell", cell).withColumn("d2", dmin)
-      .drop(cents.indices.map(j => s"kd$j"): _*)
-  }
+      cents: IndexedSeq[IndexedSeq[Long]]): DataFrame =
+    withCodeCol(df, "q", cents, "cell", "d2")
 
   /** [[withKmeansCell]] + the SECOND-nearest cell (`cell2`) for nprobe=2
     * probing: the chosen cell's distance is masked to Long.MaxValue and
     * the argmin re-run — identical tie-breaks to rank-2 of an ORDER BY
     * (distance, cell) ranking, which is what the oracle uses. */
   private def withKmeansCell2(df: DataFrame,
-      cents: IndexedSeq[IndexedSeq[Long]]): DataFrame = {
-    val withD = cents.indices.foldLeft(df)((d, j) =>
-      d.withColumn(s"kd$j", intDist2(col("q"), cents(j))))
-    val dmin = least(cents.indices.map(j => col(s"kd$j")): _*)
-    val cell = cents.indices.foldRight(lit(-1L)) { case (j, acc) =>
-      when(col(s"kd$j") === dmin, lit(j.toLong)).otherwise(acc)
+      cents: IndexedSeq[IndexedSeq[Long]]): DataFrame =
+    withDistances(df, "q", cents, "cell_") { (d, ds) =>
+      val masked = ds.zipWithIndex.map { case (dj, j) =>
+        when(lit(j.toLong) === col("cell"), lit(Long.MaxValue)).otherwise(dj)
+      }
+      d.withColumn("cell", argmin(ds)._1).withColumn("cell2", argmin(masked)._1)
     }
-    val c1 = withD.withColumn("cell", cell)
-    val masked = cents.indices.map(j =>
-      when(lit(j.toLong) === col("cell"), lit(Long.MaxValue)).otherwise(col(s"kd$j")))
-    val dmin2 = least(masked: _*)
-    val cell2 = masked.zipWithIndex.foldRight(lit(-1L)) { case ((m, j), acc) =>
-      when(m === dmin2, lit(j.toLong)).otherwise(acc)
-    }
-    c1.withColumn("cell2", cell2)
-      .drop(cents.indices.map(j => s"kd$j"): _*)
-  }
 
   /** Corpus projection with the vector norm PRECOMPUTED once per vector —
     * cosine inside a pairs join then costs one dot product, not three

@@ -938,30 +938,18 @@ object TextOps {
     // per-language because a global cut would just rank languages by
     // corpus share. Rank is (3·(rank−1)) div n_lang over the total order
     // (fam_score, doc_id) — deterministic, no percentile floats. Scale
-    // shape: the per-language rank is the q_global_shuffle TWO-PASS
-    // discipline, not a per-lang window (a single-key window would funnel
-    // corpus/|langs| rows through one task): range-bucket on
-    // fam_score div CcnetBand, broadcast the per-(lang, bucket) offsets
-    // (≤ |langs|·16 rows), row_number only within (lang, bucket).
+    // shape: the per-language rank is [[Par.globalRank]] partitioned by
+    // lang over the range bucket fam_score div CcnetBand (≤ |langs|·16
+    // offset rows).
     "q_ccnet_buckets" -> ((s, dir) => {
       val fam = queries("text_lm_familiarity")(s, dir)
         .select(col("doc_id"), col("fam_score"))
       val scored = docs(s, dir).select(col("doc_id"), col("lang"))
         .join(fam, Seq("doc_id"))
         .withColumn("bucket", expr(s"fam_score div $CcnetBand"))
-      val offs = scored.groupBy(col("lang"), col("bucket"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("offset",
-          coalesce(sum(col("n")).over(
-            Window.partitionBy(col("lang")).orderBy(col("bucket"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("lang"), col("bucket"), col("offset"))
       val tot = scored.groupBy(col("lang")).agg(count(lit(1)).as("n_lang"))
-      val wIn = Window.partitionBy(col("lang"), col("bucket"))
-        .orderBy(col("fam_score"), col("doc_id"))
-      scored.join(broadcast(offs), Seq("lang", "bucket"))
-        .withColumn("rank",
-          col("offset") + row_number().over(wIn).cast("long"))
+      Par.globalRank(scored, "bucket", Seq(col("fam_score"), col("doc_id")), "rank",
+          parts = Seq("lang"))
         .join(broadcast(tot), Seq("lang"))
         .withColumn("bucket_id", expr("(3 * (rank - 1)) div n_lang"))
         .withColumn("ccnet_bucket",

@@ -45,8 +45,8 @@ class SkewSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val copies = spark.range(10000)
       .select((col("id") + 5000000L).as("doc_id"), lit(hotText).as("text"))
     val nb = Curation.packBucketsFor(base.count())
-    val hotPacked  = Curation.curateStages(base.unionByName(copies), nb).packed
-    val basePacked = Curation.curateStages(base, nb).packed
+    val hotPacked  = Curation.curate(base.unionByName(copies), nb)
+    val basePacked = Curation.curate(base, nb)
     // every copy dies in stage 2 (its text's min doc_id is the original),
     // so the curated output is IDENTICAL to the copy-free corpus — and the
     // hot key cost the reduce side ~numPartitions rows, not 10^4 texts

@@ -48,4 +48,5 @@ GC="${SPARK_GC:--XX:+UseParallelGC}"
 exec env SPARK_GRAFT_CPUS="$CPUS" SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/dev/shm/spark-local}" \
   java $OPENS -Xms4g -Xmx"$MEM" $GC ${SPARK_EXTRA_OPTS:-} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+  -Dsun.stdout.encoding=UTF-8 -Dsun.stderr.encoding=UTF-8 \
   -cp "$CP" graft.ExtractMain "$DOCS" 42 "$OUTDIR" "$RUNID" "$@"
