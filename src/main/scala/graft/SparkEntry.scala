@@ -23,10 +23,10 @@ object SparkEntry {
     val parts = spark.sparkContext.defaultParallelism
     val n     = 2000L
     val out   = ExtractJob.extract(ExtractJob.generateInputs(spark, n, 42L, parts), parts)
-    val bad   = GoldenDiff.diff(out, ExtractJob.generateGoldens(spark, n, 42L, parts))
-      .select(col("doc_id")).distinct()
+    val bad   = GoldenDiff.mismatchedDocs(out, ExtractJob.generateGoldens(spark, n, 42L, parts))
+      .select(col("doc_id"))
     GoldenDiff.explodeSpans(out)
-      .join(bad, Seq("doc_id"), "left_anti") // verified spans only
+      .join(bad, Seq("doc_id"), "left_anti") // spans of golden-matching docs only
   }
 
   /** One entry per implemented operator from SURVEY.md §2 + the

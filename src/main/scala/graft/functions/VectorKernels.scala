@@ -119,25 +119,25 @@ object VectorKernels {
   def withCellDistances(df: DataFrame, v: String, cells: Int, dims: Int): DataFrame =
     (0 until cells).foldLeft(df)((d, j) => d.withColumn(s"d$j", dist2(col(v), centroid(j, dims))))
 
+  /** (index of the smallest of `ds`, that smallest value); ties go to the
+    * first, i.e. the smallest index. */
+  def argmin(ds: Seq[Column]): (Column, Column) = {
+    val dmin = least(ds: _*)
+    (ds.zipWithIndex.foldRight(lit(-1L)) { case ((d, j), acc) =>
+      when(d === dmin, lit(j.toLong)).otherwise(acc)
+    }, dmin)
+  }
+
   /** IVF cell assignment from the named d0..d{cells-1} columns: index of
     * the nearest centroid (first-wins tie-break). */
-  def cellFromDistances(cells: Int): Column = {
-    val dmin = least((0 until cells).map(j => col(s"d$j")): _*)
-    (0 until cells).foldRight(lit(-1L)) { case (j, acc) =>
-      when(col(s"d$j") === dmin, lit(j.toLong)).otherwise(acc)
-    }
-  }
+  def cellFromDistances(cells: Int): Column =
+    argmin((0 until cells).map(j => col(s"d$j")))._1
 
   /** Second probe cell from the named distance columns: nearest centroid
     * excluding `cell` (first-wins). */
-  def secondCellFromDistances(cells: Int, cell: Column): Column = {
-    val masked = (0 until cells).map(j =>
-      when(lit(j.toLong) === cell, lit(Double.PositiveInfinity)).otherwise(col(s"d$j")))
-    val dmin = least(masked: _*)
-    masked.zipWithIndex.foldRight(lit(-1L)) { case ((d, j), acc) =>
-      when(d === dmin, lit(j.toLong)).otherwise(acc)
-    }
-  }
+  def secondCellFromDistances(cells: Int, cell: Column): Column =
+    argmin((0 until cells).map(j =>
+      when(lit(j.toLong) === cell, lit(Double.PositiveInfinity)).otherwise(col(s"d$j"))))._1
 
   /** DuckDB SQL twins. `e` is a list-typed SQL expression. */
   object Dk {

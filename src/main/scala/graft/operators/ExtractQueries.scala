@@ -142,9 +142,10 @@ object ExtractQueries {
           expr("(2 * n_match * 1000000) div greatest(n_pred + n_gold, 1)"))
     }),
 
-    // North-rule verification as a query: per-doc golden equality flags.
-    // Aux carries both raw span tables; the oracle recomputes the
-    // anti-join diff + verdict join in SQL.
+    // North-rule verification as a query: per-doc golden equality flags
+    // from GoldenDiff's doc-level comparison. Aux carries both raw span
+    // tables; the oracle recomputes the verdict independently in SQL, as
+    // a row-level anti-join diff.
     "extract_golden_match" -> ((s, _) => {
       val parts   = s.sparkContext.defaultParallelism
       val out     = ExtractJob.extract(ExtractJob.generateInputs(s, NDocs, Seed, parts), parts)
@@ -154,8 +155,8 @@ object ExtractQueries {
       val docs = goldens.toDF()
         .select(col("doc_id"), size(col("spans")).cast("long").as("golden_spans"))
       writeAux(docs, "egm_golden_docs")
-      val bad = GoldenDiff.diff(out, goldens)
-        .select(col("doc_id")).distinct().withColumn("matches", lit(false))
+      val bad = GoldenDiff.mismatchedDocs(out, goldens)
+        .select(col("doc_id")).withColumn("matches", lit(false))
       docs.join(bad, Seq("doc_id"), "left_outer")
         .select(col("doc_id"), col("golden_spans"), coalesce(col("matches"), lit(true)).as("matches"))
     }),

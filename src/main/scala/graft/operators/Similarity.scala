@@ -178,15 +178,6 @@ object Similarity {
     f(withD, names.map(col)).drop(names: _*)
   }
 
-  /** (index of the smallest of `ds`, that smallest value); ties go to the
-    * first, i.e. the smallest index. */
-  private def argmin(ds: Seq[Column]): (Column, Column) = {
-    val dmin = least(ds: _*)
-    (ds.zipWithIndex.foldRight(lit(-1L)) { case ((d, j), acc) =>
-      when(d === dmin, lit(j.toLong)).otherwise(acc)
-    }, dmin)
-  }
-
   /** Appends `codeName` (the nearest of `cents` to quantized `qcol`,
     * first-wins, so the smallest code on ties) and `distName` (its
     * squared distance). Output columns are CALLER-NAMED because PQ

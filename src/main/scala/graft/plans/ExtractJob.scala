@@ -127,57 +127,77 @@ object ExtractJob {
   }
 }
 
-/** Golden-file verification: span-sequence equality per doc_id via a
-  * Dataset anti-join diff (BASELINE.json north_rule; reference precedent:
-  * per-document golden JSON diffing, eval_script_field_level.py:208-288).
-  * Order is part of the contract, so the join key includes the span's
-  * position (`pos` from posexplode). */
+/** Golden-file verification: span-sequence equality per doc_id
+  * (BASELINE.json north_rule; reference precedent: per-document golden
+  * JSON diffing, eval_script_field_level.py:208-288). Each side keeps its
+  * nested form: one row per doc carrying the whole span sequence, and one
+  * sort-merge full-outer join on doc_id compares the two arrays.
+  *
+  * A doc matches when both sequences hold the same (kind, text,
+  * media_ref) in the same order. `offset` is ignored, null text and
+  * media_ref read as "", and a doc missing from one side reads as an empty
+  * sequence, so an empty golden doc matches an absent extracted one. A
+  * span with a null `kind` never matches, on either side (array equality
+  * alone would call null equal to null).
+  *
+  * Precondition: `doc_id` is non-null and unique within each side. */
 object GoldenDiff {
 
   /** Explode a docs table to one row per (doc_id, pos, kind, text,
-    * media_ref). `pos` is the array index — the reading-order rank.
-    * Non-outer explode: an empty doc contributes no rows (null join keys
-    * would never equate under SQL anti-join semantics); empty-vs-nonempty
-    * mismatches are still caught by the nonempty side's rows. */
+    * media_ref). `pos` is the array index — the reading-order rank. An
+    * empty doc contributes no rows. */
   def explodeSpans(docs: Dataset[Document]): DataFrame =
     docs.select(col("doc_id"), posexplode(col("spans")).as(Seq("pos", "s")))
       .select(col("doc_id"), col("pos"), col("s.kind"),
         coalesce(col("s.text"), lit("")).as("text"),
         coalesce(col("s.media_ref"), lit("")).as("media_ref"))
 
-  private val keys = Seq("doc_id", "pos", "kind", "text", "media_ref")
+  /** (doc_id, `name`): the doc's span sequence as compared. */
+  private def spanSeqs(docs: Dataset[Document], name: String): DataFrame =
+    docs.select(col("doc_id"), transform(col("spans"), s => struct(
+      s("kind").as("kind"),
+      coalesce(s("text"), lit("")).as("text"),
+      coalesce(s("media_ref"), lit("")).as("media_ref"))).as(name))
 
-  /** Symmetric diff: rows present on exactly one side. Empty ⇔ extraction
-    * matches goldens exactly (100% span-sequence equality). Both legs are
-    * anti-joins, so Catalyst plans them as hash anti-joins (broadcast when
-    * one side is small, shuffled otherwise — correct at any scale). */
-  def diff(extracted: Dataset[Document], goldens: Dataset[Document]): DataFrame = {
-    val e = explodeSpans(extracted)
-    val g = explodeSpans(goldens)
+  /** Every doc_id of either side: (doc_id, in_golden, golden, extracted,
+    * bad), `in_golden` null for an extracted-only doc. */
+  private def compared(extracted: Dataset[Document], goldens: Dataset[Document]): DataFrame = {
+    val g     = spanSeqs(goldens, "golden").withColumn("in_golden", lit(true))
+    val e     = spanSeqs(extracted, "extracted")
+    val empty = array().cast(g.schema("golden").dataType)
+    def nullKind(seq: String) = exists(col(seq), _("kind").isNull)
     // BOTH sides scale with the corpus, so neither may broadcast — but the
     // goldens are a typed range().map() dataset whose size Catalyst
-    // estimates from the 8-byte-per-row range (~1.6 MB at 200k docs), so
-    // without a hint the planner BROADCASTS the exploded golden span
-    // table (~1 GB of real rows at 200k docs: the build side is collected
-    // to the driver and the check dies on spark.driver.maxResultSize —
-    // found by the 200k `--check` run; 100k sat just under the limit).
-    // The merge hint forces sort-merge anti-joins: both sides shuffle and
-    // SORT, which spills gracefully — shuffle_hash was tried and OOMs
-    // building 32 concurrent in-memory maps of span-text partitions
-    // (mega-doc spans make partition bytes >> row-count estimates).
-    val missing = g.join(e.hint("merge"), keys, "left_anti")
-      .withColumn("side", lit("missing"))
-    val extra   = e.join(g.hint("merge"), keys, "left_anti")
-      .withColumn("side", lit("extra"))
-    missing.unionByName(extra)
+    // estimates from the 8-byte-per-row range, so without a hint the
+    // planner could pick a build side it thinks is tiny and collect
+    // ~1 GB of real span text at 200k docs (a per-span form of this check
+    // died on spark.driver.maxResultSize that way). The merge hint forces
+    // a sort-merge join: both sides shuffle and SORT, which spills
+    // gracefully — shuffle_hash was tried on the per-span form and OOMed
+    // building concurrent in-memory maps (mega-doc rows make partition
+    // bytes >> row-count estimates).
+    g.hint("merge").join(e, Seq("doc_id"), "full_outer")
+      .select(col("doc_id"), col("in_golden"),
+        coalesce(col("golden"), empty).as("golden"),
+        coalesce(col("extracted"), empty).as("extracted"))
+      .withColumn("bad",
+        col("golden") =!= col("extracted") || nullKind("golden") || nullKind("extracted"))
   }
 
-  /** Doc-level equality summary: (docs_total, docs_matching). Cheaper than
-    * the full diff when only the rate is needed. */
+  /** The docs whose sequences differ, (doc_id, golden, extracted), both
+    * sequences carried for diagnosis. Empty ⇔ extraction matches goldens
+    * exactly (100% span-sequence equality). */
+  def mismatchedDocs(extracted: Dataset[Document], goldens: Dataset[Document]): DataFrame =
+    compared(extracted, goldens).filter(col("bad"))
+      .select(col("doc_id"), col("golden"), col("extracted"))
+
+  /** Doc-level equality summary in one aggregate: (golden docs, golden
+    * docs − mismatched docs). An extracted doc absent from the goldens
+    * counts as mismatched unless its sequence is empty. */
   def matchRate(extracted: Dataset[Document], goldens: Dataset[Document]): (Long, Long) = {
-    val d     = diff(extracted, goldens)
-    val total = goldens.count()
-    val bad   = d.select("doc_id").distinct().count()
-    (total, total - bad)
+    val r     = compared(extracted, goldens)
+      .agg(count(col("in_golden")), count_if(col("bad"))).head()
+    val total = r.getLong(0)
+    (total, total - r.getLong(1))
   }
 }

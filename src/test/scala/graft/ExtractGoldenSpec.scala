@@ -6,7 +6,8 @@ import graft.plans.{ExtractJob, GoldenDiff, LineageAccumulator}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The north-rule verification: 100% span-sequence equality
-  * (kind, text, media_ref, order) per doc_id via a Dataset anti-join diff.
+  * (kind, text, media_ref, order) per doc_id via GoldenDiff's doc-level
+  * comparison.
   * Reference precedent: golden-JSON-per-document diffing
   * (/root/reference/eval_script_field_level.py:100-102, 208-288). */
 class ExtractGoldenSpec extends AnyFunSuite with SparkSessionTestWrapper {
@@ -54,20 +55,21 @@ class ExtractGoldenSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }
   }
 
-  test("spark job: anti-join diff vs goldens is empty (1000 docs)") {
+  test("spark job: no doc mismatches its golden (1000 docs)") {
     val spark = this.spark
     val lineage = new LineageAccumulator
     spark.sparkContext.register(lineage, "extract-lineage")
 
     val inputs  = ExtractJob.generateInputs(spark, 1000, seed = 42, parts = 8)
     val goldens = ExtractJob.generateGoldens(spark, 1000, seed = 42, parts = 8)
-    // cache: the diff has two anti-join legs; without it the extraction
-    // would re-run per leg and the accumulator would multi-count
+    // cache: the check below is another action over the extraction;
+    // without it the extraction would re-run and the accumulator would
+    // multi-count
     val out = ExtractJob.extract(inputs, numPartitions = 8, lineage = Some(lineage)).cache()
     out.count()
 
-    val diff = GoldenDiff.diff(out, goldens)
-    assert(diff.isEmpty, s"diff rows: ${diff.take(5).mkString("\n")}")
+    val bad = GoldenDiff.mismatchedDocs(out, goldens)
+    assert(bad.isEmpty, s"mismatched docs: ${bad.take(5).mkString("\n")}")
 
     // lineage accumulator saw every doc, no errors, multiple partitions
     val stats = lineage.value

@@ -355,14 +355,17 @@ class PlanShapeSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
   }
 
-  test("golden diff legs plan as sort-merge anti-joins, never broadcast (extract flagship)") {
+  test("golden check plans as one sort-merge full-outer join on doc_id, never broadcast (extract flagship)") {
     val parts = spark.sparkContext.defaultParallelism
     val out   = graft.plans.ExtractJob.extract(
       graft.plans.ExtractJob.generateInputs(spark, 200L, 7L, parts), parts)
     val gold  = graft.plans.ExtractJob.generateGoldens(spark, 200L, 7L, parts)
-    val p     = graft.plans.GoldenDiff.diff(out, gold).queryExecution.executedPlan.toString
-    assert(p.contains("LeftAnti"), p.take(2000))
+    val p     = graft.plans.GoldenDiff.mismatchedDocs(out, gold).queryExecution.executedPlan.toString
+    assert(count(p, "SortMergeJoin") == 1, p.take(2000))
+    assert(p.contains("SortMergeJoin [doc_id#") && p.contains("FullOuter"), p.take(2000))
     assert(!p.contains("CartesianProduct"))
+    // the sequences are compared as whole arrays: no per-span rows
+    assert(!p.contains("Generate"), s"golden check exploded the spans:\n${p.take(2000)}")
     // BOTH sides scale with the corpus: a broadcast here means Catalyst's
     // tiny size estimate for the range().map() golden side won (and at
     // 200k docs the driver collects ~1 GB of build rows and dies on

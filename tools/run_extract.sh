@@ -36,6 +36,15 @@ done
 # sandbox artifact, not the cluster analog.)
 CEIL=$(( CPUS * 2 > 8 ? CPUS * 2 : 8 ))
 MEM="${SPARK_DRIVER_MEM:-$(( CEIL > 16 ? 16 : CEIL ))g}"
+# Xms is 4g, or the ceiling when that is smaller: the JVM refuses to start
+# with an initial heap above its maximum.
+case "$MEM" in
+  *[gG]) MEM_MB=$(( ${MEM%[gG]} * 1024 )) ;;
+  *[mM]) MEM_MB=${MEM%[mM]} ;;
+  *[kK]) MEM_MB=$(( ${MEM%[kK]} / 1024 )) ;;
+  *)     MEM_MB=$(( MEM / 1048576 )) ;;
+esac
+XMS_MB=$(( MEM_MB < 4096 ? MEM_MB : 4096 ))
 # ParallelGC, not G1 (the JDK17 default): at 32 cores on this hypervisor
 # G1's concurrent machinery burns kernel-thread system CPU catastrophically
 # — A/B same input, same minute: G1 = 914 docs/s kernelCpuSec 1309;
@@ -46,7 +55,7 @@ GC="${SPARK_GC:--XX:+UseParallelGC}"
 # SPARK_EXTRA_OPTS: ad-hoc -Dspark.* conf overrides for A/B runs
 # (SparkConf loads spark.*-prefixed system properties).
 exec env SPARK_GRAFT_CPUS="$CPUS" SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/dev/shm/spark-local}" \
-  java $OPENS -Xms4g -Xmx"$MEM" $GC ${SPARK_EXTRA_OPTS:-} \
+  java $OPENS -Xms"${XMS_MB}m" -Xmx"$MEM" $GC ${SPARK_EXTRA_OPTS:-} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Dsun.stdout.encoding=UTF-8 -Dsun.stderr.encoding=UTF-8 \
   -cp "$CP" graft.ExtractMain "$DOCS" 42 "$OUTDIR" "$RUNID" "$@"
