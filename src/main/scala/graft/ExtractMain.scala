@@ -19,7 +19,8 @@ import graft.plans.{ExtractJob, GoldenDiff, LineageAccumulator, ManifestIO}
   * corpus to parquet and exits. `--noop` skips the manifest commit and
   * discards output into the noop sink — isolates kernel+scan scaling from
   * sink behavior. With `--check`, also verifies the north-rule golden
-  * invariant (span-sequence equality) and prints the match rate.
+  * invariant (span-sequence equality) and prints the match rate and the
+  * check's wall seconds (`checkSec`).
   * Exit code 1 if the check fails. The table has `SPARK_GRAFT_CPUS` × 8
   * buckets, so a resume must run with the count that wrote it.
   */
@@ -138,9 +139,12 @@ object ExtractMain {
 
     var ok = true
     if (check) {
+      val tc          = System.nanoTime()
       val goldens     = ExtractJob.generateGoldens(spark, nDocs, seed, parts)
       val (total, eq) = GoldenDiff.matchRate(ManifestIO.read(spark, outDir), goldens)
-      println(s"""{"goldenDocs":$total,"matching":$eq,"equalityPct":${100.0 * eq / math.max(total, 1)}}""")
+      val checkSec    = (System.nanoTime() - tc) / 1e9
+      println(s"""{"goldenDocs":$total,"matching":$eq,"equalityPct":${100.0 * eq / math.max(total, 1)},""" +
+        f""""checkSec":$checkSec%.3f}""")
       ok = total == eq
     }
     spark.stop()

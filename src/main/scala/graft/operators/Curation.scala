@@ -128,18 +128,11 @@ object Curation {
   private val SpamTopK = 3L
 
   /** The synthesized host-multigraph EDGES shared by PageRank, TrustRank
-    * and the spam-mass estimator: every doc emits source → rotating
-    * target (never a self-loop), every third doc links the planted hub
-    * src0 instead. */
-  private def hostEdgesBase(s: SparkSession, dir: String): DataFrame = {
-    val idx = substring(col("source"), 4, 6).cast("int")
-    val rot = concat(lit("src"),
-      ((idx + 1 + (col("doc_id") % 19).cast("int")) % 20).cast("string"))
-    val v = when(col("doc_id") % 3 === 0 && col("source") =!= "src0", lit("src0"))
-      .otherwise(rot)
-    docs(s, dir).select(col("source").as("u"), v.as("v"))
+    * and the spam-mass estimator: every doc emits one source →
+    * [[WebOps.linkTarget]] edge, weighted by multiplicity. */
+  private def hostEdgesBase(s: SparkSession, dir: String): DataFrame =
+    docs(s, dir).select(col("source").as("u"), WebOps.linkTarget.as("v"))
       .groupBy(col("u"), col("v")).agg(count(lit(1)).as("w"))
-  }
 
   /** Out-weights and vertex set of a weighted edge list. */
   private def graphOf(e: DataFrame): (DataFrame, DataFrame) = (
@@ -228,10 +221,8 @@ object Curation {
 
   /** Split + token-budget shard packing (stages 4-5) over the keepers. */
   def packFrom(keepers: DataFrame, nBuckets: Long): DataFrame = {
-    val h  = hex32(concat(lit("split:"), col("doc_id").cast("string"))) % 100
     val wp = Window.partitionBy(col("bucket")).orderBy(col("doc_id"))
-    keepers.select(col("doc_id"),
-        when(h < TrainPct, lit("train")).otherwise(lit("val")).as("split"),
+    keepers.select(col("doc_id"), splitOf(col("doc_id")).as("split"),
         (hex32(concat(lit("pack:"), col("doc_id").cast("string"))) % nBuckets).as("bucket"),
         size(tokens(col("text"))).cast("long").as("n_tokens"))
       .withColumn("cum_tokens", sum(col("n_tokens")).over(wp))

@@ -92,6 +92,13 @@ object Dedup {
     * to MaxBandGroup² pairs). Mirrored bit-for-bit in the DuckDB oracle. */
   val MaxBandGroup = 256
 
+  /** The [[MaxBandGroup]] cap over a (doc_id, band, k1, k2) frame. */
+  private def capBands(banded: DataFrame): DataFrame =
+    banded.withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy(col("band"), col("k1"), col("k2")).orderBy(col("doc_id"))))
+      .filter(col("rn") <= MaxBandGroup).drop("rn")
+
   /** Containment dedup (`dedup_containment`): discriminative-shingle df
     * cap for candidate generation (a shingle appearing in more than
     * [[ContainDfCap]] docs is boilerplate, not evidence of copying — its
@@ -186,12 +193,7 @@ object Dedup {
   /** [[minhashLsh]] against an externally-supplied banded frame (read back
     * from a durable stage table on resume). */
   def minhashLshFrom(corpus: DataFrame, banded: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val capped = banded
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("band"), col("k1"), col("k2")).orderBy(col("doc_id"))))
-      .filter(col("rn") <= MaxBandGroup).drop("rn")
-      .cache() // ids + band keys only — tiny
+    val capped = capBands(banded).cache() // ids + band keys only — tiny
     // cand and sets both appear twice downstream (sh_a and sh_b sides);
     // without the caches the band join + shingle recompute would execute
     // once per appearance. Both frames are small by construction (ids-only
@@ -451,7 +453,6 @@ object Dedup {
     * stage, so an ingest run pays only the batch's signature pass plus
     * index-side scans of hashes and band keys. */
   def incrementalIngest(old: DataFrame, bandedOld: DataFrame, newb: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val oldH = old.select(md5(col("text")).as("h")).distinct()
     // the batch frame is MATERIALIZED once (batch-sized — at scale a real
     // ingest run has it on disk already): the 4-branch status union and
@@ -465,11 +466,8 @@ object Dedup {
     val bdup    = rest.join(keepIds, Seq("doc_id"), "left_anti").select(col("doc_id"))
     val keepers = rest.join(keepIds, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("text"))
-    def cap(b: DataFrame) = b.withColumn("rn", row_number().over(
-        Window.partitionBy(col("band"), col("k1"), col("k2")).orderBy(col("doc_id"))))
-      .filter(col("rn") <= MaxBandGroup).drop("rn")
-    val bN = cap(bandedKeysFor(keepers))
-    val bO = cap(bandedOld)
+    val bN = capBands(bandedKeysFor(keepers))
+    val bO = capBands(bandedOld)
     val cand = bN.as("n").join(bO.as("o"),
         col("n.band") === col("o.band") && col("n.k1") === col("o.k1") &&
           col("n.k2") === col("o.k2"))
@@ -995,13 +993,11 @@ object Dedup {
     * sign-LSH candidate generation with hamming-≤`probeHamming` multiprobe
     * (0 = own bucket only — the round-3 single-probe shape, kept for the
     * straddling-pair regression test), exact-cosine verification at
-    * `threshold`. Scale shape: the (planes+1)× probe explosion happens on
-    * an (id, bucket) longs-only frame; each unordered pair surfaces
-    * exactly once (from the smaller id's probe set — own ≠ flipped and
-    * flips are pairwise distinct, so no dedup pass is needed); vectors
-    * (with norms precomputed once — bit-identical to the inline cosine,
-    * same IEEE ops in the same order) join back by unique id only for
-    * candidates that survive banding. */
+    * `threshold` ([[verifyCosinePairs]]). Scale shape: the (planes+1)×
+    * probe explosion happens on an (id, bucket) longs-only frame; each
+    * unordered pair surfaces exactly once (from the smaller id's probe set
+    * — own ≠ flipped and flips are pairwise distinct, so no dedup pass is
+    * needed). */
   def embeddingNearDups(all: DataFrame, planes: Int, dims: Int = 64,
       threshold: Double = 0.99, probeHamming: Int = 1): DataFrame = {
     // cached: both join sides (probe explode + own-bucket side) read keys,
@@ -1020,14 +1016,26 @@ object Dedup {
         col("pb") === col("bkt_b") && col("vec_id") < col("vec_b"))
       .select(col("vec_id").as("vec_a"), col("vec_b"),
         when(col("pb") === col("own"), lit(0L)).otherwise(lit(1L)).as("probe_dist"))
+    verifyCosinePairs(cand, all, threshold)
+  }
+
+  /** Exact-cosine verify of candidate vector pairs: `cand` carries
+    * (vec_a, vec_b, …) ids, `all` the (vec_id, v: array<double>) corpus.
+    * Vectors, with their norms computed once, join back by unique id on
+    * both sides only for the candidates (never a corpus-wide pairing),
+    * and a pair survives iff round(cos, 4) >= `threshold` — the rounded
+    * value both engines agree on bit-for-bit. Output: `cand`'s columns
+    * plus `cos`. */
+  private[operators] def verifyCosinePairs(cand: DataFrame, all: DataFrame,
+      threshold: Double): DataFrame = {
     val vecs = all.withColumn("nrm", VectorKernels.norm(col("v")))
     cand
       .join(vecs.select(col("vec_id").as("vec_a"), col("v").as("va"), col("nrm").as("na")),
         Seq("vec_a"))
       .join(vecs.select(col("vec_id").as("vec_b"), col("v").as("vb"), col("nrm").as("nb")),
         Seq("vec_b"))
-      .select(col("vec_a"), col("vec_b"), col("probe_dist"),
-        round(VectorKernels.dot(col("va"), col("vb")) / (col("na") * col("nb")), 4).as("cos"))
+      .select(cand.columns.toSeq.map(col) :+ round(VectorKernels.cosineWithNorms(
+        col("va"), col("vb"), col("na"), col("nb")), 4).as("cos"): _*)
       .filter(col("cos") >= threshold)
   }
 

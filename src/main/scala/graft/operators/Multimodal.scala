@@ -177,14 +177,8 @@ object Multimodal {
         .withColumn("nrm", VectorKernels.norm(col("v")))
       val q = emb.filter(col("doc_id") < 3)
         .select(col("doc_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-      val pairs = emb.join(broadcast(q), col("doc_id") =!= col("query_id"))
-        .select(col("query_id"), col("doc_id").as("neighbor_id"),
-          (VectorKernels.dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
-      pairs.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 3)
-        .select(col("query_id"), col("neighbor_id"), col("rank"), round(col("cos"), 4).as("cos"))
+      Similarity.topk(emb.join(broadcast(q), col("doc_id") =!= col("query_id"))
+        .select(col("query_id"), col("doc_id").as("neighbor_id"), Similarity.qcos.as("cos")), 3)
     }))
 
   // --- DuckDB oracles (payload byte k == hex pair 2k+1..2k+2) -------------

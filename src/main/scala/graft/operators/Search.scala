@@ -160,13 +160,9 @@ object Search {
     val q = e.filter(col("vec_id") % 100 === 0)
       .select((col("vec_id") + 900000L).as("query_id"),
         col("v").as("qv"), col("nrm").as("qn"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("doc_id"))
-    e.crossJoin(broadcast(q))
-      .select(col("query_id"), col("vec_id").as("doc_id"),
-        (VK.dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= TopK)
-      .select("query_id", "doc_id", "rank")
+    Similarity.topk(e.crossJoin(broadcast(q))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), Similarity.qcos.as("cos")), TopK)
+      .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
   }
 
   /** Hybrid retrieval: the lexical (BM25) and semantic (embedding cosine)

@@ -228,19 +228,11 @@ object Similarity {
     val qf = withKmeansCell2(base, cents).filter(col("vec_id") < NQuery)
     val qprobes = qf.select(col("vec_id").as("query_id"),
       explode(array(col("cell"), col("cell2"))).as("cell"))
-    val qsub = base.filter(col("vec_id") < NQuery)
-    val dtLo = qsub.select(col("vec_id").as("query_id"), explode(array(
-        (0 until PqK).map(c => struct(lit(c.toLong).as("code_lo"),
-          intDist2(col("qlo"), books(0)(c)).as("pd_lo"))): _*)).as("x"))
-      .select(col("query_id"), col("x.code_lo").as("code_lo"), col("x.pd_lo").as("pd_lo"))
-    val dtHi = qsub.select(col("vec_id").as("query_id"), explode(array(
-        (0 until PqK).map(c => struct(lit(c.toLong).as("code_hi"),
-          intDist2(col("qhi"), books(1)(c)).as("pd_hi"))): _*)).as("x"))
-      .select(col("query_id"), col("x.code_hi").as("code_hi"), col("x.pd_hi").as("pd_hi"))
+    val qsub = base.filter(col("vec_id") < NQuery).withColumnRenamed("vec_id", "query_id")
     val adc = idx.join(broadcast(qprobes), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(dtLo), Seq("query_id", "code_lo"))
-      .join(broadcast(dtHi), Seq("query_id", "code_hi"))
+      .join(adcTable(qsub, "qlo", books(0), "code_lo", "pd_lo"), Seq("query_id", "code_lo"))
+      .join(adcTable(qsub, "qhi", books(1), "code_hi", "pd_hi"), Seq("query_id", "code_hi"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         (col("pd_lo") + col("pd_hi")).as("adc"))
     val w = Window.partitionBy(col("query_id"))
@@ -269,12 +261,8 @@ object Similarity {
       d.withColumn("cell", argmin(ds)._1).withColumn("cell2", argmin(masked)._1)
     }
 
-  /** Corpus projection with the vector norm PRECOMPUTED once per vector —
-    * cosine inside a pairs join then costs one dot product, not three
-    * folds (measured 3x on the sf0.1 bench; at 100 TB the norm is a table
-    * column you never recompute). Same IEEE ops in the same order as
-    * folding norms inline, so results are bit-identical and the DuckDB
-    * oracles (which spell out the full cosine) still match exactly. */
+  /** Corpus projection with the vector norm precomputed once per vector,
+    * for [[qcos]]. */
   private def emb(s: SparkSession, dir: String): DataFrame =
     Par.fanOut(s.read.parquet(s"$dir/embeddings.parquet"))
       .select(col("vec_id"), col("label"), toDouble(col("embedding")).as("v"))
@@ -328,12 +316,50 @@ object Similarity {
   private def sqDot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
 
-  private def topk(pairs: DataFrame): DataFrame = {
+  /** The broadcast-probe pair cosine: query vector `qv` and norm `qn`
+    * against corpus vector `v` and norm `nrm`. */
+  private[graft] val qcos: Column =
+    cosineWithNorms(col("qv"), col("v"), col("qn"), col("nrm"))
+
+  /** Per-query top-`k` of a (query_id, neighbor_id, cos) frame. Ranks on
+    * the UNROUNDED cosine, descending, ties to the smaller neighbor_id —
+    * the oracles' `ORDER BY cos DESC, neighbor_id ASC`, so a tie at the
+    * k boundary cuts identically in both engines — and rounds `cos` to 4
+    * places only after ranking. A window over the query partition, never
+    * a global sort. Output (query_id, neighbor_id, rank, cos). */
+  private[graft] def topk(pairs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
     pairs.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= K)
+      .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rank"), round(col("cos"), 4).as("cos"))
   }
+
+  /** Recall@[[K]] of ranked neighbor lists: each (query_id, neighbor_id)
+    * row of `base` is a hit iff `probe` holds the same pair, rolled up per
+    * (query_id, `by`…) to `hits` and `recall` = hits / K (4 places). A
+    * left join from `base`, so a query with no overlap reads recall 0;
+    * with K rows per query on both sides either list may be the base.
+    * Touches ids only, never vectors. */
+  private[graft] def recallAtK(base: DataFrame, probe: DataFrame, by: String*): DataFrame = {
+    val ids = Seq("query_id", "neighbor_id")
+    base.select((ids ++ by).map(col): _*)
+      .join(probe.select(ids.map(col): _*).withColumn("m", lit(1)), ids, "left")
+      .groupBy(("query_id" +: by).map(col): _*)
+      .agg(count(col("m")).as("hits"), round(count(col("m")) / lit(K.toDouble), 4).as("recall"))
+  }
+
+  /** The PQ asymmetric-distance (ADC) table of one subspace: per query
+    * of `q` (carrying `query_id` and the exact quantized subvector column
+    * `sub`), one row per code of `book` with its squared distance —
+    * (query_id, `code`, `dist`). Queries × PqK rows (M × 256 per query in
+    * production), so it is BROADCAST: the corpus scan then ranks by two
+    * dictionary joins and one add per row, touching only the code table,
+    * never a float vector. */
+  private[graft] def adcTable(q: DataFrame, sub: String, book: IndexedSeq[IndexedSeq[Long]],
+      code: String, dist: String): DataFrame =
+    broadcast(q.select(col("query_id"), explode(array(book.indices.map(c =>
+        struct(lit(c.toLong).as(code), intDist2(col(sub), book(c)).as(dist))): _*)).as("x"))
+      .select(col("query_id"), col(s"x.$code").as(code), col(s"x.$dist").as(dist)))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Exact ANN baseline: broadcast the query set, scan the corpus once.
@@ -342,9 +368,8 @@ object Similarity {
       val q = e.filter(col("vec_id") < NQuery)
         .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
       val pairs = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos"))
-      topk(pairs)
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), qcos.as("cos"))
+      topk(pairs, K)
     }),
 
     // Hard-negative mining for contrastive training (the batch job behind
@@ -364,7 +389,7 @@ object Similarity {
           col("v").as("qv"), col("nrm").as("qn"))
       val pairs = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("qlabel"), col("vec_id").as("neighbor_id"),
-          col("label"), round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4).as("cos"))
+          col("label"), round(qcos, 4).as("cos"))
       val wPos = Window.partitionBy(col("query_id"))
         .orderBy(col("cos").desc, col("neighbor_id").asc)
       val pos = pairs.filter(col("label") === col("qlabel"))
@@ -412,9 +437,8 @@ object Similarity {
       val pairs = e.select(col("cell"), col("vec_id"), col("v"), col("nrm"))
         .join(broadcast(probes), Seq("cell"))
         .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos"))
-      topk(pairs)
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), qcos.as("cos"))
+      topk(pairs, K)
     }),
 
     // LSH-bucketed ANN: candidates restricted to the query's bucket.
@@ -426,9 +450,8 @@ object Similarity {
           col("bucket"))
       val pairs = b.join(broadcast(q), Seq("bucket"))
         .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos"))
-      topk(pairs)
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), qcos.as("cos"))
+      topk(pairs, K)
     }),
 
     // TRAINED coarse quantizer: k-means (2 Lloyd iterations, integer
@@ -564,28 +587,18 @@ object Similarity {
     // PQ search with asymmetric distance computation (ADC): the query
     // stays EXACT (quantized subvectors), the corpus is its codes, and
     // the distance is dist(q_lo, book[code_lo]) + dist(q_hi,
-    // book[code_hi]) — looked up, not computed: per query the PqM×PqK
-    // table of subspace distances is materialized once (a 16-row frame
-    // here; M×256 in production) and BROADCAST, so the scan does two
-    // dictionary joins and one add per corpus row, touching only the
-    // 3-long code table — never the float vectors. Ranking is by exact
-    // int64 ADC distance (ascending, id tie-break), which is what makes
-    // a trained-quantizer SEARCH path hash-exact across engines.
+    // book[code_hi]) — looked up in the broadcast [[adcTable]]s, not
+    // computed. Ranking is by exact int64 ADC distance (ascending, id
+    // tie-break), which is what makes a trained-quantizer SEARCH path
+    // hash-exact across engines.
     "ann_pq_topk" -> ((s, dir) => {
       val books = pqTrain(s, dir)
       val codes = pqCodes(s, dir, books).select(col("vec_id"), col("code_lo"), col("code_hi"))
       val q = pqVectors(s, dir).filter(col("vec_id") < NQuery)
-      val dtLo = q.select(col("vec_id").as("query_id"), explode(array(
-        (0 until PqK).map(c => struct(lit(c.toLong).as("code_lo"),
-          intDist2(col("qlo"), books(0)(c)).as("pd_lo"))): _*)).as("x"))
-        .select(col("query_id"), col("x.code_lo").as("code_lo"), col("x.pd_lo").as("pd_lo"))
-      val dtHi = q.select(col("vec_id").as("query_id"), explode(array(
-        (0 until PqK).map(c => struct(lit(c.toLong).as("code_hi"),
-          intDist2(col("qhi"), books(1)(c)).as("pd_hi"))): _*)).as("x"))
-        .select(col("query_id"), col("x.code_hi").as("code_hi"), col("x.pd_hi").as("pd_hi"))
+        .withColumnRenamed("vec_id", "query_id")
       val adc = codes
-        .join(broadcast(dtLo), Seq("code_lo"))
-        .join(broadcast(dtHi), Seq("query_id", "code_hi"))
+        .join(adcTable(q, "qlo", books(0), "code_lo", "pd_lo"), Seq("code_lo"))
+        .join(adcTable(q, "qhi", books(1), "code_hi", "pd_hi"), Seq("query_id", "code_hi"))
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
           (col("pd_lo") + col("pd_hi")).as("adc"))
@@ -636,16 +649,8 @@ object Similarity {
             col("vec_id") < col("vec_b"))
         .select(col("vec_id").as("vec_a"), col("vec_b"), col("cell"))
       // the vector side never pays the assignment: it only carries
-      // (id, v, norm) for the exact verify of banding survivors
-      val vecs = all.withColumn("nrm", norm(col("v")))
-      cand
-        .join(vecs.select(col("vec_id").as("vec_a"), col("v").as("va"), col("nrm").as("na")),
-          Seq("vec_a"))
-        .join(vecs.select(col("vec_id").as("vec_b"), col("v").as("vb"), col("nrm").as("nb")),
-          Seq("vec_b"))
-        .select(col("vec_a"), col("vec_b"), col("cell"),
-          round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 4).as("cos"))
-        .filter(col("cos") >= 0.99)
+      // (id, v) for the exact verify of banding survivors
+      Dedup.verifyCosinePairs(cand, all, 0.99)
     }),
 
     // The trained codebook powering the actual SEARCH path: same
@@ -663,9 +668,8 @@ object Similarity {
       val pairs = e.select(col("cell"), col("vec_id"), col("v"), col("nrm"))
         .join(broadcast(q), Seq("cell"))
         .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos"))
-      topk(pairs)
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), qcos.as("cos"))
+      topk(pairs, K)
     }),
 
     // IVF-PQ composite search (Jégou et al. 2011, the FAISS `IVFx,PQy`
@@ -690,17 +694,9 @@ object Similarity {
     // Recall@k of the IVF-PQ path against the exact float baseline — the
     // observable that prices the composite's BOTH approximations (cell
     // pruning + code quantization) in one number, the figure a production
-    // index sweep tunes (nprobe, M, k) against. Ids-only join + rollup.
-    "ann_ivfpq_recall" -> ((s, dir) => {
-      val bf = queries("ann_bruteforce_topk")(s, dir)
-        .select(col("query_id"), col("neighbor_id"))
-      val ap = ivfPqTopk(s, dir)
-        .select(col("query_id"), col("neighbor_id")).withColumn("m", lit(1))
-      bf.join(ap, Seq("query_id", "neighbor_id"), "left")
-        .groupBy(col("query_id"))
-        .agg(count(col("m")).as("hits"),
-          round(count(col("m")) / lit(K.toDouble), 4).as("recall"))
-    }),
+    // index sweep tunes (nprobe, M, k) against.
+    "ann_ivfpq_recall" -> ((s, dir) =>
+      recallAtK(queries("ann_bruteforce_topk")(s, dir), ivfPqTopk(s, dir))),
 
     // Multi-probe LSH ANN: the query probes its own bucket PLUS every
     // hamming-1 bucket (one flipped hyperplane sign) — the standard
@@ -719,26 +715,16 @@ object Similarity {
           explode(array(col("bucket") +: flips: _*)).as("bucket"))
       val pairs = b.join(broadcast(q), Seq("bucket"))
         .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos"))
-      topk(pairs)
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), qcos.as("cos"))
+      topk(pairs, K)
     }),
 
     // Recall@k of the approximate (LSH) path against the exact baseline —
     // the quality observable every approximate index must ship with: at
     // 100 TB you cannot eyeball neighbor lists, you track recall on a
-    // query sample. |approx ∩ exact| / k per query, queries with zero
-    // overlap included (left join from the exact side).
-    "ann_recall" -> ((s, dir) => {
-      val bf = queries("ann_bruteforce_topk")(s, dir)
-        .select(col("query_id"), col("neighbor_id"))
-      val ap = queries("ann_lsh_topk")(s, dir)
-        .select(col("query_id"), col("neighbor_id")).withColumn("m", lit(1))
-      bf.join(ap, Seq("query_id", "neighbor_id"), "left")
-        .groupBy(col("query_id"))
-        .agg(count(col("m")).as("hits"),
-          round(count(col("m")) / lit(K.toDouble), 4).as("recall"))
-    }),
+    // query sample.
+    "ann_recall" -> ((s, dir) =>
+      recallAtK(queries("ann_bruteforce_topk")(s, dir), queries("ann_lsh_topk")(s, dir))),
 
     // Matryoshka truncation audit (Kusupati et al. 2022): recall@K of
     // brute-force search over PREFIX-truncated embeddings (dims 16, 32,
@@ -749,27 +735,21 @@ object Similarity {
     // printed here; the same audit shape prices any truncation (trained
     // or not). Scale: per level one broadcast-probe corpus scan over
     // sliced vectors (narrower than the full scan — slicing happens
-    // before the join), K·|probes| rows after ranking; the recall join
-    // and rollup touch (query, neighbor) ids only.
+    // before the join), K·|probes| rows after ranking.
     "ann_matryoshka_recall" -> ((s, dir) => {
       val e = emb(s, dir)
       val exact = queries("ann_bruteforce_topk")(s, dir)
-        .select(col("query_id"), col("neighbor_id")).withColumn("m", lit(1))
-      MrlLevels.map { p =>
+      val levels = MrlLevels.map { p =>
         val ev = e.select(col("vec_id"), slice(col("v"), 1, p).as("v"))
           .withColumn("nrm", norm(col("v")))
         val q = ev.filter(col("vec_id") < NQuery)
           .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
         val pairs = ev.join(broadcast(q), col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos"))
-        topk(pairs).select(col("query_id"), col("neighbor_id"))
+          .select(col("query_id"), col("vec_id").as("neighbor_id"), qcos.as("cos"))
+        topk(pairs, K).select(col("query_id"), col("neighbor_id"))
           .withColumn("dims_kept", lit(p.toLong))
-      }.reduce(_ unionByName _)
-        .join(exact, Seq("query_id", "neighbor_id"), "left")
-        .groupBy(col("query_id"), col("dims_kept"))
-        .agg(count(col("m")).as("hits"),
-          round(count(col("m")) / lit(K.toDouble), 4).as("recall"))
+      }
+      recallAtK(levels.reduce(_ unionByName _), exact, "dims_kept")
     }),
 
     // PQ retrieve + exact re-rank — the shape a production PQ deployment
@@ -798,17 +778,9 @@ object Similarity {
             (x, i) => x.cast("double") + lit(0.01) * ((i % 3) - 1).cast("double"))).as("qf"))
         .withColumn("qlo", slice(col("qf"), 1, PqSub))
         .withColumn("qhi", slice(col("qf"), PqSub + 1, PqSub))
-      val dtLo = probes.select(col("query_id"), explode(array(
-        (0 until PqK).map(c => struct(lit(c.toLong).as("code_lo"),
-          intDist2(col("qlo"), books(0)(c)).as("pd_lo"))): _*)).as("x"))
-        .select(col("query_id"), col("x.code_lo").as("code_lo"), col("x.pd_lo").as("pd_lo"))
-      val dtHi = probes.select(col("query_id"), explode(array(
-        (0 until PqK).map(c => struct(lit(c.toLong).as("code_hi"),
-          intDist2(col("qhi"), books(1)(c)).as("pd_hi"))): _*)).as("x"))
-        .select(col("query_id"), col("x.code_hi").as("code_hi"), col("x.pd_hi").as("pd_hi"))
       val adc = codes
-        .join(broadcast(dtLo), Seq("code_lo"))
-        .join(broadcast(dtHi), Seq("query_id", "code_hi"))
+        .join(adcTable(probes, "qlo", books(0), "code_lo", "pd_lo"), Seq("code_lo"))
+        .join(adcTable(probes, "qhi", books(1), "code_hi", "pd_hi"), Seq("query_id", "code_hi"))
         .select(col("query_id"), col("vec_id"), (col("pd_lo") + col("pd_hi")).as("adc"))
       val wA = Window.partitionBy(col("query_id"))
         .orderBy(col("adc").asc, col("vec_id").asc)
@@ -872,7 +844,7 @@ object Similarity {
         .join(sb.select(col("src_id"), col("v").as("sv"), col("nrm").as("sn")), Seq("src_id"))
         .join(tb.select(col("tgt_id"), col("v").as("tv"), col("nrm").as("tn")), Seq("tgt_id"))
         .select(col("src_id"), col("tgt_id"),
-          floor(lit(1e6) * (lit(1.0) + dot(col("sv"), col("tv")) / (col("sn") * col("tn"))))
+          floor(lit(1e6) * (lit(1.0) + cosineWithNorms(col("sv"), col("tv"), col("sn"), col("tn"))))
             .cast("long").as("s"))
       val w  = Window.partitionBy(col("src_id")).orderBy(col("s").desc, col("tgt_id").asc)
       val rk = scored.withColumn("rn", row_number().over(w).cast("long"))
@@ -906,7 +878,7 @@ object Similarity {
       val corpus = tgtV.withColumn("tn", norm(col("v")))
       val scored = corpus.crossJoin(broadcast(probe))
         .select(col("src_id"), col("tgt_id"),
-          floor(lit(1e6) * (lit(1.0) + dot(col("sv"), col("v")) / (col("sn") * col("tn"))))
+          floor(lit(1e6) * (lit(1.0) + cosineWithNorms(col("sv"), col("v"), col("sn"), col("tn"))))
             .cast("long").as("s"))
       val w = Window.partitionBy(col("src_id")).orderBy(col("s").desc, col("tgt_id").asc)
       val exact = scored.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
@@ -960,18 +932,9 @@ object Similarity {
 
     // Recall@K of the SQ8 path against the exact cosine baseline — the
     // observable that prices the 4× compression (ann_recall's role for
-    // the quantized index). Left join from the exact side so zero-overlap
-    // queries surface as recall 0.
-    "ann_sq_recall" -> ((s, dir) => {
-      val bf = queries("ann_bruteforce_topk")(s, dir)
-        .select(col("query_id"), col("neighbor_id"))
-      val ap = queries("ann_sq_topk")(s, dir)
-        .select(col("query_id"), col("neighbor_id")).withColumn("m", lit(1))
-      bf.join(ap, Seq("query_id", "neighbor_id"), "left")
-        .groupBy(col("query_id"))
-        .agg(count(col("m")).as("hits"),
-          round(count(col("m")) / lit(K.toDouble), 4).as("recall"))
-    }))
+    // the quantized index).
+    "ann_sq_recall" -> ((s, dir) =>
+      recallAtK(queries("ann_bruteforce_topk")(s, dir), queries("ann_sq_topk")(s, dir))))
 
   // --- DuckDB oracles -----------------------------------------------------
   // The index sizes are the same integer CASE rules over count(*), cross-

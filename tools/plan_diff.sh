@@ -5,9 +5,11 @@
 # shape, so they are normalized before the compare: expression ids
 # (`#123`), exchange ids (`plan_id=123`), RDD ids (`RDD[12]`), lambda
 # variable names (`lambda x_33`), the source line of a checkpointed
-# RDD's call site (`Dedup.scala:282`) and JVM lambda class names
-# (`Lambda$12/0x…@1f2e`). Prints each differing file's
-# diff and exits 1 on any difference or on a file only one side has.
+# RDD's call site (`Dedup.scala:282`), JVM lambda class names
+# (`Lambda$12/0x…@1f2e`), and, in the streaming keys' action plans,
+# per-run query UUIDs and object identity hashes (`…Write@31e4a64d`).
+# Prints each differing file's diff and exits 1 on any difference or on
+# a file only one side has.
 #
 # Usage: tools/plan_diff.sh <dirA> <dirB>
 #   e.g. runMain graft.BenchExtra <sfDir> /tmp/plans_a p <keys> on one
@@ -22,7 +24,9 @@ norm() {
   sed -E 's/#[0-9]+/#N/g; s/plan_id=[0-9]+/plan_id=N/g;
           s/RDD\[[0-9]+\]/RDD[N]/g; s/(lambda [a-z]+)_[0-9]+/\1_N/g;
           s/\.scala:[0-9]+/.scala:N/g;
-          s/Lambda\$[0-9]+\/0x[0-9a-f]+@[0-9a-f]+/Lambda/g' "$1"
+          s/Lambda\$[0-9]+\/0x[0-9a-f]+@[0-9a-f]+/Lambda/g;
+          s/[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}/UUID/g;
+          s/([A-Za-z0-9_$])@[0-9a-f]+\b/\1@H/g' "$1"
 }
 
 STATUS=0
