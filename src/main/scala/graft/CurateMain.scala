@@ -112,14 +112,17 @@ object CurateMain {
       .write.mode("overwrite").partitionBy("split").parquet(s"$outDir/packed")
 
     // per-stage counts: every stage is a durable table by now, so counts
-    // are metadata-cheap reads — no stage recomputes for its count
+    // are metadata-cheap reads — no stage recomputes for its count. The
+    // packed table's three counts are one aggregate; a struct is never
+    // null, so its distinct count equals `distinct().count()` of the
+    // three columns, null shards included.
     val nDeduped  = deduped.count()
     val nClusters = clusters.select(col("cluster_id")).distinct().count()
-    val written   = spark.read.parquet(s"$outDir/packed")
-    val nKept     = written.count()
-    val nShards = written
-      .select(col("split"), col("bucket"), col("shard")).distinct().count()
-    val nTrain  = written.filter(col("split") === "train").count()
+    val packed    = spark.read.parquet(s"$outDir/packed")
+      .agg(count(lit(1)), count_if(col("split") === "train"),
+        count_distinct(struct(col("split"), col("bucket"), col("shard"))))
+      .head()
+    val (nKept, nTrain, nShards) = (packed.getLong(0), packed.getLong(1), packed.getLong(2))
     val wallSec = (System.nanoTime() - t0) / 1e9
 
     f"""{"docsIn":$nRaw,"afterQualityAndExact":$nDeduped,""" +
@@ -133,7 +136,8 @@ object CurateMain {
     * exact-hash index, `banded/` the near-dup signature index. Writes the
     * (doc_id, status) classification to `<outDir>/ingest/<runId>/` and
     * returns per-status counts as the lineage JSON. An ingest run pays
-    * only the batch's signature pass + index-side scans — never
+    * the batch's signature pass, shuffles sized by the batch, and scans
+    * of the two index tables (see [[Dedup.incrementalIngest]]) — never
     * corpus × batch, and never a re-curation of the standing corpus. */
   def ingest(spark: SparkSession, outDir: String, batchParquet: String,
       runId: String): String = {

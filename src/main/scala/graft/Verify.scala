@@ -41,7 +41,9 @@ object Verify {
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
     def q(s: String): String = "\"" + graft.eval.J.escape(s) + "\""
-    val json = SparkEntry.oracleSql
+    // only the selected keys: a subset run's compare then covers exactly
+    // the queries it wrote
+    val json = SparkEntry.oracleSql.filter { case (k, _) => selected(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -93,7 +93,7 @@ object Dedup {
   val MaxBandGroup = 256
 
   /** The [[MaxBandGroup]] cap over a (doc_id, band, k1, k2) frame. */
-  private def capBands(banded: DataFrame): DataFrame =
+  private[graft] def capBands(banded: DataFrame): DataFrame =
     banded.withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("band"), col("k1"), col("k2")).orderBy(col("doc_id"))))
@@ -366,7 +366,7 @@ object Dedup {
     * joined on BY ID as `sh_a` / `sh_b`. Candidate generation shuffles
     * ids only; the set payload joins back once per side, and only for
     * the pairs that survive blocking. */
-  private def withPairSets(cand: DataFrame, setsA: DataFrame, setsB: DataFrame,
+  private[graft] def withPairSets(cand: DataFrame, setsA: DataFrame, setsB: DataFrame,
       a: String = "doc_a", b: String = "doc_b"): DataFrame =
     cand.join(setsA.select(col("doc_id").as(a), col("sh").as("sh_a")), Seq(a))
       .join(setsB.select(col("doc_id").as(b), col("sh").as("sh_b")), Seq(b))
@@ -374,7 +374,7 @@ object Dedup {
   /** |A∩B| / |A∪B| over shingle SETS, 4 dp. CONTRACT: both inputs are
     * already-distinct arrays (every caller pre-distincts at set build,
     * where it runs once per doc instead of once per candidate pair). */
-  private def jaccard(a: Column, b: Column): Column = {
+  private[graft] def jaccard(a: Column, b: Column): Column = {
     val i = size(array_intersect(a, b))
     round(i / (size(a) + size(b) - i), 4)
   }
@@ -433,62 +433,70 @@ object Dedup {
 
   /** Incremental-ingest classification — the daily-crawl shape: a NEW
     * batch is classified against the STANDING corpus without ever
-    * re-deduplicating the old data. Stages (each the incremental twin of
-    * a full-corpus operator):
-    *   1 exact-vs-index:  new content hashes semi-join the index's hash
-    *     set — the shuffle carries (hash, id) sized by the BATCH;
-    *   2 exact-in-batch:  min-id per hash among the remainder (keeper
-    *     stays in the flow, the rest are `batch_dup`);
-    *   3 near-vs-index:   the batch keepers' banded signature keys
-    *     equi-join the index's banded table (at scale: the durable
-    *     signatures table CurateMain already materializes — the index is
-    *     READ, not recomputed), exact-Jaccard verify on survivors;
-    *   4 everything else is `novel`.
-    * Cost scales with the batch (plus one index-side scan of hashes +
-    * band keys), not with corpus × batch — the property that makes daily
-    * ingestion affordable at 100 TB standing corpora. Both band-key
-    * sides carry the deterministic [[MaxBandGroup]] cap, mirrored in the
-    * oracle. `bandedOld` is the standing corpus's [[bandedKeysFor]]
-    * frame; `CurateMain --ingest` reads it from its durable `banded/`
-    * stage, so an ingest run pays only the batch's signature pass plus
-    * index-side scans of hashes and band keys. */
+    * re-deduplicating the old data. Each batch doc gets one status:
+    *   exact_dup  its content hash occurs in the index;
+    *   batch_dup  another batch doc with the same hash has a smaller id;
+    *   near_dup   a batch keeper (neither of the above) whose shingle-set
+    *              Jaccard with some LSH-candidate index doc is ≥ 0.8;
+    *   novel      every other keeper.
+    * The plan, three batch-sized materializations and the output:
+    *   1 tags: one scan of the index's md5, semi-joined against the
+    *     broadcast batch hashes, and the batch rows share one window over
+    *     the hash — an index hit in the group marks exact dups, otherwise
+    *     `min(doc_id)` keeps one doc and marks the rest batch dups;
+    *   2 the keepers' capped band keys (their signature pass);
+    *   3 candidates: `bandedOld` semi-joined against the broadcast batch
+    *     band keys, THEN capped — exact, because the [[MaxBandGroup]] cap
+    *     window is partitioned by (band, k1, k2) and the semi-join keeps
+    *     whole groups — and joined to the broadcast batch keys (a pair
+    *     sharing several bands appears once per band; the verify's
+    *     result is a set, so that is harmless);
+    *   4 verify: the candidate ids broadcast into one scan of `old`, the
+    *     batch shingle sets broadcast onto the survivors; the verified
+    *     ids join back onto the tags by a broadcast left join.
+    * COST CONTRACT: every shuffle is sized by the batch or its
+    * candidates, and the index is only scanned — `old` twice (hashes,
+    * then candidate texts), `bandedOld` once: no join shuffles an index
+    * row and index text never shuffles (`PlanShapeSpec` pins both). The
+    * batch sides are broadcast, so a batch must fit in one; ingest a
+    * larger crawl in several batches. `doc_id` keys the batch; `old`
+    * need not be hash-unique (`dedup_incremental` passes the raw
+    * documents table). `CurateMain --ingest` passes its durable
+    * `deduped/` and `banded/` stage tables, so an ingest run pays the
+    * batch's signature pass plus those index scans. */
   def incrementalIngest(old: DataFrame, bandedOld: DataFrame, newb: DataFrame): DataFrame = {
-    val oldH = old.select(md5(col("text")).as("h")).distinct()
-    // the batch frame is MATERIALIZED once (batch-sized — at scale a real
-    // ingest run has it on disk already): the 4-branch status union and
-    // the stage chain would otherwise re-execute the whole upstream once
-    // per consumer (measured 30 s → 4 s at sf0.1 for this query)
-    val nh    = newb.withColumn("h", md5(col("text"))).localCheckpoint()
-    val exact = nh.join(oldH, Seq("h"), "left_semi").select(col("doc_id"))
-    val rest  = nh.join(oldH, Seq("h"), "left_anti")
-    val keepIds = rest.groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
-      .select("doc_id")
-    val bdup    = rest.join(keepIds, Seq("doc_id"), "left_anti").select(col("doc_id"))
-    val keepers = rest.join(keepIds, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("text"))
-    val bN = capBands(bandedKeysFor(keepers))
-    val bO = capBands(bandedOld)
-    val cand = bN.as("n").join(bO.as("o"),
-        col("n.band") === col("o.band") && col("n.k1") === col("o.k1") &&
-          col("n.k2") === col("o.k2"))
-      .select(col("n.doc_id").as("n_id"), col("o.doc_id").as("o_id")).distinct()
-      .cache() // ids-only pairs; consumed by both set prunes + the verify join
-    def sets(src: DataFrame, idc: String) = shingleSets(
-      src.join(cand.select(col(idc).as("doc_id")).distinct(), Seq("doc_id"), "left_semi"),
-      tokens(col("text")))
-    // materialize the verified near-ids (tiny), then release cand: `near`
-    // feeds both its own status branch and the novel anti-join
-    val near = withPairSets(cand, sets(keepers, "n_id"), sets(old, "o_id"), "n_id", "o_id")
-      .filter(jaccard(col("sh_a"), col("sh_b")) >= 0.8)
-      .select(col("n_id").as("doc_id")).distinct()
+    val nh  = newb.withColumn("h", md5(col("text")))
+    val hit = old.select(md5(col("text")).as("h"))
+      .join(broadcast(nh.select(col("h"))), Seq("h"), "left_semi")
+      .withColumn("indexed", lit(true))
+    val byH = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
+    // materialized before bandedKeysFor: its fanOut reads the input's
+    // partition count, which would run the tag shuffles a second time
+    val tagged = nh.unionByName(hit, allowMissingColumns = true)
+      .select(col("doc_id"), col("text"), col("indexed"),
+        when(count(col("indexed")).over(byH) > 0, lit("exact_dup"))
+          .when(col("doc_id") =!= min(col("doc_id")).over(byH), lit("batch_dup")).as("status"))
+      .filter(col("indexed").isNull).drop("indexed")
       .localCheckpoint()
-    cand.unpersist()
-    val novel = keepers.select(col("doc_id"))
-      .join(near, Seq("doc_id"), "left_anti")
-    exact.withColumn("status", lit("exact_dup"))
-      .unionByName(bdup.withColumn("status", lit("batch_dup")))
-      .unionByName(near.withColumn("status", lit("near_dup")))
-      .unionByName(novel.withColumn("status", lit("novel")))
+    val keepers = tagged.filter(col("status").isNull).select(col("doc_id"), col("text"))
+    val bN = capBands(bandedKeysFor(keepers)).localCheckpoint()
+    val keys = Seq("band", "k1", "k2")
+    val bO = capBands(bandedOld.join(broadcast(bN.select(keys.map(col): _*)), keys, "left_semi"))
+    val cand = broadcast(bN.withColumnRenamed("doc_id", "n_id"))
+      .join(bO.withColumnRenamed("doc_id", "o_id"), keys)
+      .select(col("n_id"), col("o_id"))
+      .localCheckpoint()
+    def sets(src: DataFrame, idc: String, as: String) = shingleSets(
+      src.join(broadcast(cand.select(col(idc).as("doc_id"))), Seq("doc_id"), "left_semi"),
+      tokens(col("text"))).select(col("doc_id").as(idc), col("sh").as(as))
+    val near = sets(old, "o_id", "sh_b")
+      .join(broadcast(cand), Seq("o_id"))
+      .join(broadcast(sets(keepers, "n_id", "sh_a")), Seq("n_id"))
+      .filter(jaccard(col("sh_a"), col("sh_b")) >= 0.8)
+      .select(col("n_id").as("doc_id"), lit(true).as("near")).distinct()
+    tagged.join(broadcast(near), Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("status"),
+        when(col("near"), lit("near_dup")).otherwise(lit("novel"))).as("status"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

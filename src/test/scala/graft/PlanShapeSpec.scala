@@ -1134,4 +1134,84 @@ class PlanShapeSpec extends AnyFunSuite with SparkSessionTestWrapper {
         s"vote shuffle carries text: $cols")
     }
   }
+
+  test("incremental ingest: the index is only scanned — no shuffled join above it, no index text shuffled") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, ExprId}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, ProjectExec, SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    // the CurateMain --ingest layout: durable deduped/ and banded/ stage
+    // tables as the index, a batch planting exact, near and novel docs
+    val tmp  = java.nio.file.Files.createTempDirectory("ingest-plan").toString
+    val docs = spark.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+    docs.write.parquet(s"$tmp/stages/deduped")
+    graft.operators.Dedup.bandedKeysFor(docs).write.parquet(s"$tmp/stages/banded")
+    docs.filter(col("doc_id") % 3 === 0)
+      .select((col("doc_id") + 5000000L).as("doc_id"),
+        concat(col("text"), lit(" zzz")).as("text"))
+      .unionByName(docs.filter(col("doc_id") % 3 === 1))
+      .write.parquet(s"$tmp/batch")
+    def isIndex(p: SparkPlan) = p match {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.exists { r =>
+        r.toString.endsWith("/stages/deduped") || r.toString.endsWith("/stages/banded") }
+      case _ => false
+    }
+    def hasIndexScan(p: SparkPlan) = p.find(isIndex).nonEmpty
+    // the output columns of `p` that carry column `src` unchanged: passed
+    // through, renamed, or at its position in a union
+    def carriers(p: SparkPlan, src: ExprId): Set[ExprId] = p match {
+      case s: FileSourceScanExec => s.output.map(_.exprId).filter(_ == src).toSet
+      case u: UnionExec =>
+        val in = u.children.map(c => c.output.map(_.exprId).map(carriers(c, src)))
+        u.output.indices.filter(i => in.exists(_(i))).map(u.output(_).exprId).toSet
+      case pr: ProjectExec =>
+        val in = carriers(pr.child, src)
+        pr.projectList.collect {
+          case a: Attribute if in(a.exprId) => a.exprId
+          case a @ Alias(r: Attribute, _) if in(r.exprId) => a.exprId
+        }.toSet
+      case other =>
+        other.children.flatMap(carriers(_, src)).toSet.intersect(other.output.map(_.exprId).toSet)
+    }
+    def indexText(p: SparkPlan): Seq[ExprId] = p.collect {
+      case s: FileSourceScanExec if isIndex(s) => s.output.filter(_.name == "text").map(_.exprId)
+    }.flatten
+    // every action the ingest runs (its materializations and the write),
+    // each plan as planned before adaptive re-optimization
+    val seen = java.util.Collections.synchronizedList(new java.util.ArrayList[SparkPlan]())
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
+        seen.add(qe.executedPlan.transformDown { case a: AdaptiveSparkPlanExec => a.initialPlan }); ()
+      }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      graft.operators.Dedup.incrementalIngest(spark.read.parquet(s"$tmp/stages/deduped"),
+          spark.read.parquet(s"$tmp/stages/banded"), spark.read.parquet(s"$tmp/batch"))
+        .write.parquet(s"$tmp/ingest")
+      import scala.jdk.CollectionConverters._
+      def plans = seen.asScala.toList
+      val deadline = System.currentTimeMillis() + 30000
+      while (System.currentTimeMillis() < deadline &&
+        !plans.exists(_.toString.contains("InsertIntoHadoopFsRelationCommand"))) Thread.sleep(100)
+      val ps = plans
+      assert(ps.exists(_.toString.contains("InsertIntoHadoopFsRelationCommand")),
+        s"the ingest write was not captured (${ps.size} plans)")
+      assert(ps.exists(hasIndexScan), "no captured plan scans the index")
+      ps.foreach { p =>
+        p.foreach {
+          case j @ (_: SortMergeJoinExec | _: ShuffledHashJoinExec) =>
+            assert(!hasIndexScan(j), s"a shuffled join has an index scan beneath it:\n$j")
+          case e: ShuffleExchangeExec =>
+            assert(indexText(e).forall(carriers(e, _).isEmpty), s"an exchange carries index text:\n$e")
+          case _ =>
+        }
+      }
+    } finally spark.listenerManager.unregister(listener)
+  }
 }
