@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.{Curation, Dedup}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -174,15 +176,60 @@ object CurateMain {
       f""""wallSec":$wallSec%.3f}"""
   }
 
-  def main(args: Array[String]): Unit = {
-    val ingestMode = args.headOption.contains("--ingest")
-    val input  = args.headOption.getOrElse("/root/testdata/sf0.01/documents.parquet")
-    val outDir = if (args.length > 1) args(1) else "/tmp/graft-curate-out"
+  /** A checked command line: the pipeline, or an ingest of one batch. */
+  private[graft] sealed trait Command
+  private[graft] final case class Curate(input: String, outDir: String) extends Command
+  private[graft] final case class Ingest(batch: String, outDir: String, runId: String)
+    extends Command
 
-    val spark = MainSession.start(if (ingestMode) "graft-ingest" else "graft-curate")
-    println(
-      if (ingestMode) ingest(spark, args(2), args(1), args.lift(3).getOrElse("i1"))
-      else run(spark, input, outDir))
+  private val Usage = "usage: graft.CurateMain <documentsParquet> <outDir> | " +
+    "graft.CurateMain --ingest <batchParquet> <outDir> [runId]"
+
+  /** Whether `path` names anything, read the way `spark.read.parquet`
+    * reads it — a plain path, a URI (`file:`, `hdfs://`, `s3a://`) or a
+    * glob — by asking its Hadoop file system, so no session is needed. A
+    * file system this check cannot query (no client on the classpath, or
+    * credentials only the session carries) counts as present: the read
+    * then reports the path itself. */
+  private def inputExists(path: String): Boolean = {
+    val p = new Path(path)
+    try Option(p.getFileSystem(new Configuration()).globStatus(p)).exists(_.nonEmpty)
+    catch { case _: java.io.IOException => true }
+  }
+
+  /** `args` as a [[Command]], checked before any Spark session starts: a
+    * wrong argument count, a missing batch parquet or pipeline outDir, or
+    * a missing input that no committed stage can stand in for fails with a
+    * named IllegalArgumentException. Reads the file systems, nothing else;
+    * the input and the batch may be anything `spark.read.parquet` takes,
+    * the outDir is local, as [[run]] writes it. */
+  private[graft] def parseArgs(args: Seq[String]): Command = args match {
+    case "--ingest" +: rest =>
+      require(rest.size == 2 || rest.size == 3,
+        s"--ingest needs <batchParquet> <outDir> [runId], got ${rest.size} argument(s); $Usage")
+      require(inputExists(rest(0)), s"batch parquet ${rest(0)} does not exist")
+      require(Files.exists(Paths.get(rest(1), "STAGES.json")),
+        s"${rest(1)} has no STAGES.json — run the curation pipeline first")
+      Ingest(rest(0), rest(1), rest.lift(2).getOrElse("i1"))
+    case Seq(input, outDir) =>
+      // a resume reads the input only for the count and the deduped stage
+      require(inputExists(input) ||
+          (Files.exists(Paths.get(outDir, "STAGES.json")) && valid(s"$outDir/stages/deduped")),
+        s"input parquet $input does not exist and $outDir has no committed stages to resume")
+      Curate(input, outDir)
+    case _ => throw new IllegalArgumentException(Usage)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val cmd   = parseArgs(args.toSeq)
+    val spark = MainSession.start(cmd match {
+      case _: Ingest => "graft-ingest"
+      case _         => "graft-curate"
+    })
+    println(cmd match {
+      case Curate(input, outDir)        => run(spark, input, outDir)
+      case Ingest(batch, outDir, runId) => ingest(spark, outDir, batch, runId)
+    })
     spark.stop()
   }
 }

@@ -469,11 +469,12 @@ object Curation {
       val clusters = Dedup.connectedComponents(pairs)
       val qual     = TextOps.qualityFrame(corpus).select(col("doc_id"), col("quality"))
       // labeled feeds both the keeper agg and the final join UNCACHED:
-      // its expensive inputs are already materialized (minhashLsh
-      // localCheckpoints its verified pairs, connectedComponents its
-      // label rounds), so the second execution re-reads checkpoint
-      // blocks plus one cheap quality scan — a cache here only added a
-      // materialization barrier (measured +2 s at sf0.1)
+      // its expensive inputs are already materialized (below the
+      // broadcast bound minhashLsh and connectedComponents return local
+      // frames; above it, localCheckpointed pairs and label rounds), so
+      // the second execution re-reads them plus one cheap quality scan —
+      // a cache here only added a materialization barrier (measured +2 s
+      // at sf0.1)
       val labeled = qual.join(clusters, Seq("doc_id"), "left")
         .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
       keepBestResolve(labeled)

@@ -2,8 +2,9 @@ package graft.operators
 
 import graft.functions.TextKernels._
 import graft.functions.VectorKernels
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, classic}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deduplication operators for the training-data pipeline: exact,
   * MinHash+LSH, SimHash, n-gram Jaccard, and embedding-cosine near-dup.
@@ -190,8 +191,57 @@ object Dedup {
   def minhashLsh(corpus: DataFrame): DataFrame =
     minhashLshFrom(corpus, bandedKeysFor(corpus))
 
+  /** Driver heap one pair row costs on the small branches below: the
+    * collected Row with its two boxed longs, the pair's union-find entries
+    * and labels, and its share of the local frames built from them (up to
+    * two id or label rows per pair). Spark's SizeEstimator reads 665 B for
+    * [[connectedComponents]] and 632 B for [[minhashLshFrom]] on JDK 17
+    * with compressed oops (`DedupCcSpec` keeps the figure within 2× of
+    * that); Spark's own size estimate of the row, 24 B, is far below it. */
+  private[graft] val PairDriverBytes = 768L
+
+  /** Most rows a SMALL pair frame may have: rows × [[PairDriverBytes]]
+    * within both `broadcastBudget` (`spark.sql.autoBroadcastJoinThreshold`,
+    * the session's budget for a frame that is safe to ship to every
+    * executor) and a quarter of `driverHeap`, so a raised threshold never
+    * lets the driver take more than its heap can hold. -1 when broadcast
+    * is disabled: every frame is then large. */
+  private[graft] def smallPairCap(broadcastBudget: Long, driverHeap: Long): Long =
+    if (broadcastBudget < 0) -1L
+    else math.min(math.min(broadcastBudget, driverHeap / 4) / PairDriverBytes,
+      Int.MaxValue - 1L)
+
+  /** `pairs`' rows when the frame is SMALL ([[smallPairCap]] of the
+    * session's threshold and the driver's max heap; no knob of its own).
+    * One bounded `limit(cap + 1)` collect reads the row count — never a
+    * count and then a collect; it costs no job when `pairs` is already a
+    * local frame. None when the frame is over the cap or broadcast is
+    * disabled. */
+  private[graft] def smallPairs(
+      pairs: DataFrame, driverHeap: Long = Runtime.getRuntime.maxMemory): Option[Array[Row]] = {
+    val cap = smallPairCap(pairs.sparkSession.asInstanceOf[classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold, driverHeap)
+    if (cap < 0) None
+    else {
+      val rows = pairs.limit(cap.toInt + 1).collect()
+      if (rows.length <= cap) Some(rows) else None
+    }
+  }
+
+  /** `rows` as a local frame (a LocalRelation: no scan, no job to read). */
+  private def localFrame(s: SparkSession, rows: Array[Row], schema: StructType): DataFrame =
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
   /** [[minhashLsh]] against an externally-supplied banded frame (read back
-    * from a durable stage table on resume). */
+    * from a durable stage table on resume).
+    *
+    * [[smallPairs]] reads the cached candidate pairs once. Below its bound
+    * the verify is two bounded actions: the survivors' shingle sets are
+    * built from a corpus scan through a broadcast semi-join of the
+    * collected ids (the [[incrementalIngest]] shape), and the verified
+    * (doc_a, doc_b, jaccard) rows are collected and returned as a local
+    * frame. Above it, the candidates stay distributed and the verified
+    * frame is localCheckpointed. Both branches give the same rows. */
   def minhashLshFrom(corpus: DataFrame, banded: DataFrame): DataFrame = {
     val capped = capBands(banded).cache() // ids + band keys only — tiny
     // cand and sets both appear twice downstream (sh_a and sh_b sides);
@@ -204,32 +254,98 @@ object Dedup {
       .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
       .distinct()
       .cache()
-    val ids = cand.select(col("doc_a").as("doc_id"))
-      .unionByName(cand.select(col("doc_b").as("doc_id"))).distinct()
-    // broadcast(ids): the survivor-id set is ids-only and small by the
-    // capped-band construction, so the semi-join must never shuffle the
-    // corpus TEXT by doc_id (guide §3.1) — the scan streams through a
-    // broadcast hash semi-join; fanOut keeps the shingle recompute off a
-    // single scan task at bench scale (no-op on a many-split input).
-    val sets = shingleSets(corpus.join(ids, Seq("doc_id"), "left_semi"),
-      tokens(col("text"))).cache()
-    val verified = withPairSets(cand, sets, sets)
+    def verify(pairs: DataFrame, sets: DataFrame): DataFrame = withPairSets(pairs, sets, sets)
       .select(col("doc_a"), col("doc_b"), jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= 0.8)
-      // materialize the (small) verified-pairs frame, then release the
-      // three intermediate caches: Verify runs the whole catalog in one
-      // session, and un-released caches would accumulate for its lifetime
-      .localCheckpoint()
+    val verified = smallPairs(cand) match {
+      case Some(rows) =>
+        val s    = corpus.sparkSession
+        val ids  = rows.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct.map(Row(_))
+        val sets = shingleSets(corpus.join(broadcast(localFrame(s, ids, StructType(Seq(
+            StructField("doc_id", LongType, nullable = false))))), Seq("doc_id"), "left_semi"),
+          tokens(col("text")))
+        val v = verify(broadcast(localFrame(s, rows, cand.schema)), sets)
+        localFrame(s, v.collect(), v.schema)
+      case None =>
+        val ids = cand.select(col("doc_a").as("doc_id"))
+          .unionByName(cand.select(col("doc_b").as("doc_id"))).distinct()
+        // the survivor-id set is ids-only and small by the capped-band
+        // construction, so the planner broadcasts it within the threshold
+        // and the semi-join never shuffles the corpus TEXT by doc_id
+        // (guide §3.1): the scan streams through a broadcast hash semi-join
+        val sets = shingleSets(corpus.join(ids, Seq("doc_id"), "left_semi"),
+          tokens(col("text"))).cache()
+        // materialize the (small) verified-pairs frame, then release the
+        // three intermediate caches: Verify runs the whole catalog in one
+        // session, and un-released caches would accumulate for its lifetime
+        val v = verify(cand, sets).localCheckpoint()
+        sets.unpersist()
+        v
+    }
     capped.unpersist()
     cand.unpersist()
-    sets.unpersist()
     verified
   }
 
   /** Duplicate-CLUSTER resolution: connected components over a near-dup
     * pair list. LSH emits pairs; what a dedup pass actually needs is one
     * keeper per transitive cluster (a~b, b~c ⇒ {a,b,c} even when a,c were
-    * never a candidate pair).
+    * never a candidate pair). Each node's label is its component's
+    * smallest doc_id.
+    *
+    * Two branches, switched by the [[smallPairs]] bound (rows ×
+    * [[PairDriverBytes]] within `spark.sql.autoBroadcastJoinThreshold` and
+    * a quarter of the driver heap):
+    *  - SMALL: the pairs are collected (free when they are already a
+    *    local frame, as [[minhashLshFrom]] returns below the same bound)
+    *    and [[unionFindLabels]] solves them on the driver — no rounds, no
+    *    checkpoints; the labels come back as a local frame;
+    *  - LARGE (or broadcast disabled): the distributed rounds of
+    *    [[connectedComponentsIter]], unchanged.
+    * Both give the same labels. `maxIter` bounds the distributed rounds
+    * and is checked on both branches. */
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
+    requireRounds(maxIter)
+    smallPairs(pairs.select("doc_a", "doc_b")) match {
+      case Some(rows) =>
+        val s = pairs.sparkSession
+        import s.implicits._
+        unionFindLabels(rows.map(r => (r.getLong(0), r.getLong(1))))
+          .toSeq.toDF("doc_id", "cluster_id")
+      case None => connectedComponentsIter(pairs, maxIter)._1
+    }
+  }
+
+  /** (doc_id, cluster_id) for every id in `pairs`, sorted by doc_id:
+    * union-find whose root is always the smaller id, so each root — and
+    * label — is its component's min doc_id, exactly the distributed
+    * fixpoint. Path compression keeps each find near-constant. */
+  private[graft] def unionFindLabels(pairs: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      if (!parent.contains(x)) parent(x) = x
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var c = x
+      while (c != root) { val next = parent(c); parent(c) = root; c = next }
+      root
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toArray.sorted.map(id => (id, find(id)))
+  }
+
+  private def requireRounds(maxIter: Int): Unit =
+    require(maxIter >= 2,
+      s"connectedComponents needs maxIter >= 2 (got $maxIter): convergence " +
+        "compares two consecutive rounds")
+
+  /** The distributed branch of [[connectedComponents]], plus the number of
+    * rounds taken (the deep-chain property test pins the O(log D) round
+    * count). The path for pair frames over the small bound, and the
+    * reference the driver branch is tested against.
     *
     * Each round does (1) min-label PROPAGATION — l'(u) = min over the
     * closed neighborhood's labels (one equi-join + one groupBy(min) on
@@ -253,16 +369,9 @@ object Dedup {
     * need diameter > 2^maxIter) throws instead of returning silently
     * wrong labels. `maxIter` must be at least 2: convergence is decided
     * by comparing two rounds, so even an empty pair frame takes two. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame =
-    connectedComponentsIter(pairs, maxIter)._1
-
-  /** [[connectedComponents]] + the number of rounds taken (exposed so the
-    * deep-chain property test can pin the O(log D) round count). */
   private[graft] def connectedComponentsIter(
       pairs: DataFrame, maxIter: Int = 25): (DataFrame, Int) = {
-    require(maxIter >= 2,
-      s"connectedComponents needs maxIter >= 2 (got $maxIter): convergence " +
-        "compares two consecutive rounds")
+    requireRounds(maxIter)
     val reliable = pairs.sparkSession.sparkContext.getCheckpointDir.isDefined
     // non-eager: the checkpoint materializes inside the round's
     // convergence action instead of as its own job — one action per

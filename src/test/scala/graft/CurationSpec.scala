@@ -2,8 +2,13 @@ package graft
 
 import graft.functions.TextKernels
 import graft.operators.Curation
+import org.apache.spark.graft.BusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Curation-operator semantics: the corpus-scaling pack-bucket rule, the
   * winnowing containment guarantee, and the planted partial-containment
@@ -248,5 +253,39 @@ class CurationSpec extends AnyFunSuite with SparkSessionTestWrapper {
         .agg(sum(col("n_chars"))).head.getLong(0).toDouble
       assert(est > 0.85 * tot && est < 1.2 * tot, s"estimate $est vs true $tot")
     } finally { out.unpersist(); () }
+  }
+
+  /** Jobs one `CurateMain.run` may start on the fixture below: 37 when the
+    * near-dup pairs are verified and clustered below the broadcast bound,
+    * plus a margin of 4 for planner variation. The always-distributed
+    * verify and CC rounds that the bound replaced took 57 on the same
+    * input. The run is bound by the per-job floor at this size, so its
+    * job count is a cost figure in its own right. */
+  private val CurateJobBudget = 41
+
+  test("CurateMain.run over a planted near-dup corpus stays within its job budget") {
+    val tmp   = Files.createTempDirectory("curate-jobs").toString
+    val input = s"$tmp/input"
+    // the corpus plus a ' zzz' near-dup copy of each doc: ~500 LSH pairs,
+    // the shape of the benchmark's planted corpus
+    val d = spark.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+    d.unionByName(d.select((col("doc_id") + 1000000L).as("doc_id"),
+        concat(col("text"), lit(" zzz")).as("text")))
+      .write.parquet(input)
+
+    val sc   = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    BusDrain(sc)
+    sc.addSparkListener(listener)
+    val json =
+      try { val j = CurateMain.run(spark, input, s"$tmp/out"); BusDrain(sc); j }
+      finally sc.removeSparkListener(listener)
+    assert(json.contains("\"nearDupClusters\""), json)
+    info(s"${jobs.get} Spark jobs")
+    assert(jobs.get <= CurateJobBudget,
+      s"CurateMain.run started ${jobs.get} Spark jobs, budget $CurateJobBudget")
   }
 }
